@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import graft.engine.{ArtifactCache, LakeFixtures, Mv, Tables}
+import graft.engine.{ArtifactCache, Artifacts, Mv, Tables}
 
 /** Measures the MV rollup rewrite's claim: the SAME user query (a
   * q1-shaped aggregate over lineitem), first against the raw table,
@@ -51,9 +51,10 @@ object BenchMv {
     val hash = ArtifactCache.artifactHash(
       base.select("l_returnflag", "l_linestatus", "l_quantity")).take(16)
     val gcols = Seq("l_returnflag", "l_linestatus")
-    val root = LakeFixtures.cached(spark, "mv_lineitem_bench", hash) { r =>
+    val root = ArtifactCache.directory(spark, Artifacts.cacheRoot,
+      Artifacts.lakeFixture("mv_lineitem_bench"), sfDir)(Nil)(hash) { r =>
       Mv.register(spark, "li_bench", base, gcols, Seq("l_quantity"), r)
-    }
+    }.dir
     Mv.register(spark, "li_bench", base, gcols, Seq("l_quantity"), root)
     query().collect() // warmup the rewritten plan
     val mv = median(Seq.fill(5)(time()))

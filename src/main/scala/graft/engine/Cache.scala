@@ -11,17 +11,33 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * §4.1): a stage rerun is skipped iff the hash of (computation ×
   * inputs) is unchanged.
   *
-  * Hash composition:
+  * Hash composition ([[artifactHash]]):
   *  - "specific hash"   → the canonicalized logical plan (normalizes
   *    alias ids/ordering, so equivalent plans share a hash);
   *  - "dependency hash" → the leaf input files' (path, length,
   *    modification time) fingerprint, via the Hadoop FS API — works
   *    unchanged against any Hadoop-compatible store (local now,
   *    s3a/hdfs by config, matching pipetree's Local/S3 backends).
+  * Callers whose producing frame has no stable plan hash (checkpoint-
+  * backed training loops, typed lambdas) pass their own: the input
+  * frame's hash plus a version in the name or a logic tag.
   *
-  * At 100 TB: artifacts are parquet directories keyed by hash; the
-  * existence probe is one FS metadata call, and re-listing leaf files
-  * costs one listing per input table — never a data read.
+  * ONE install protocol serves every artifact, parquet frame or
+  * directory tree (lake fixtures, shard folders):
+  *  - an artifact lives at `<root>/<name>-<hash>` and is complete iff
+  *    it holds `_SUCCESS`;
+  *  - a miss builds into `<root>/.inflight-<name>-<hash>-<nanos>`,
+  *    marks `_SUCCESS`, heals a marker-less corpse at the target, then
+  *    renames into place — or discards its copy when a concurrent
+  *    winner got there first, so readers never see a half-written
+  *    artifact; a miss also runs [[sweepStale]];
+  *  - a hit refreshes `_SUCCESS`'s mtime (the LRU clock the sweep
+  *    reads).
+  * One in-JVM hit memo sits in front of it: see [[directory]].
+  *
+  * At 100 TB: the existence probe is one FS metadata call, and
+  * re-listing leaf files costs one listing per input table — never a
+  * data read.
   */
 object ArtifactCache {
 
@@ -72,8 +88,8 @@ object ArtifactCache {
     // caching anyway.
     require(df.inputFiles.nonEmpty,
       "artifactHash requires file-backed inputs (the plan string does " +
-        "not capture in-memory data); use materializeKeyed with an " +
-        "explicit content hash instead")
+        "not capture in-memory data); pass an explicit content hash " +
+        "instead")
     val inputPart = df.inputFiles.sorted.map { f =>
       val p = new Path(f)
       val fs = p.getFileSystem(conf)
@@ -87,57 +103,21 @@ object ArtifactCache {
     // artifact (e.g. the year(l_shipdate)-partitioned DPP layout) for
     // every UTC consumer. Folding them in makes a differently-configured
     // session create a DIFFERENT artifact instead of corrupting this one.
-    val confPart = Seq("spark.sql.session.timeZone", "spark.sql.ansi.enabled")
-      .map(k => s"$k=${spark.conf.getOption(k).getOrElse("")}")
-      .mkString("\n")
-    md5hex(planPart + "\n--confs--\n" + confPart +
+    md5hex(planPart + "\n--confs--\n" + confFp(spark) +
       "\n--inputs--\n" + inputPart)
   }
 
-  /** Returns the cached artifact if one exists for this computation's
-    * hash; otherwise computes, writes, and reads back. The read-back
-    * (rather than returning `df`) makes downstream consumers scan the
-    * materialized parquet — identical behavior on hit and miss.
-    * Writes land in a scratch dir and are renamed into place: a
-    * concurrent run racing on the same hash either wins the rename or
-    * discards its scratch copy — readers never see a half-written
-    * artifact directory. */
-  def materialize(df: DataFrame, cacheRoot: String, name: String): DataFrame =
-    materializeKeyed(df.sparkSession, cacheRoot, name, artifactHash(df))(df)
+  /** Hex digest of raw bytes — the public face of [[md5hex]] for
+    * logic-tag probes (a fixture encoder's output on a fixed probe
+    * image, folded into a keyed artifact's hash so editing the codec
+    * regenerates the artifact instead of serving stale blobs). */
+  def bytesTag(bs: Array[Byte]*): String = {
+    val md = MessageDigest.getInstance("MD5")
+    bs.foreach(md.update)
+    md.digest().map("%02x".format(_)).mkString
+  }
 
-  // ------------------------------------------------------------------
-  // Fast HIT path (round-19 optimization, guide §1/§5: the bench split
-  // showed artifact-consumer keys spending 0.6–1.3 s of DRIVER time
-  // per call just re-deriving the content hash — every call rebuilt
-  // the full producing frame (eager analysis of the wide LSH/minhash
-  // plans ≈ 0.4 s), walked `inputFiles` (≈ 0.2 s), and re-rendered the
-  // canonical plan string, only to find the same artifact dir as last
-  // time. The §P6 doc always CLAIMED "re-listing leaf files costs one
-  // listing per input table — never a data read"; this memo makes the
-  // code match the claim.)
-  //
-  // The memo stores METADATA ONLY — (observed input-listing
-  // fingerprint, semantics-bearing conf fingerprint, resolved artifact
-  // dir) — never rows. Every call re-verifies freshness from the
-  // filesystem: it re-lists the producing frame's input directories
-  // (plus their parents, so an added/removed partition subdirectory is
-  // seen via the parent listing and its mtime) and compares against
-  // the recorded fingerprint. ANY difference — file added, removed,
-  // resized, touched, directory restructured — or a changed
-  // semantics-bearing conf, or a vanished _SUCCESS marker, falls back
-  // to the full derivation (rebuild frame → canonical-plan hash →
-  // stat), exactly as before. A false MISS only costs speed; a false
-  // HIT would need an input mutation invisible to both the direct
-  // parent listing (len+mtime of every child) and the grandparent
-  // listing+mtime — not a thing on the local/posix and
-  // Hadoop-compatible stores this engine targets.
-  // ------------------------------------------------------------------
-  private case class HitMemo(inputDirs: Seq[String], listingFp: String,
-                             confFp: String, dir: String)
-  private val hitMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, HitMemo]()
-
-  private[engine] def confFp(spark: SparkSession): String =
+  private def confFp(spark: SparkSession): String =
     Seq("spark.sql.session.timeZone", "spark.sql.ansi.enabled")
       .map(k => s"$k=${spark.conf.getOption(k).getOrElse("")}")
       .mkString("\n")
@@ -155,6 +135,155 @@ object ArtifactCache {
       .map(k => s"$k=${spark.conf.getOption(k).getOrElse("")}")
       .mkString("\n")
 
+  /** Parquet face: the artifact's frame, read back from its directory
+    * on a hit and a miss alike (so downstream consumers scan the
+    * materialized parquet either way). `produce` is evaluated only
+    * when the artifact must be built; see [[directory]] for
+    * `inputsKey`, `watch` and `hash`. Callers that need their own
+    * writer (partitionBy, parquet writer options) use [[directory]]. */
+  def materialize(spark: SparkSession, root: String, name: String,
+                  inputsKey: String)(watch: => Seq[DataFrame])(
+                  hash: => String)(produce: => DataFrame): DataFrame =
+    spark.read.parquet(directory(spark, root, name, inputsKey)(watch)(hash)(
+      produce.write.mode("overwrite").parquet(_)).dir)
+
+  /** The `--plan` probe: the complete artifact directory for
+    * (name, hash) if one exists. Reads no data and builds nothing. */
+  def lookup(spark: SparkSession, root: String, name: String,
+             hash: String): Option[String] = {
+    val dir = artifactDir(root, name, hash)
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (fs.exists(new Path(dir, "_SUCCESS"))) Some(dir.toString) else None
+  }
+
+  /** An artifact directory and whether this call built it (a miss). */
+  case class Installed(dir: String, built: Boolean)
+
+  private def artifactDir(root: String, name: String, hash: String): Path =
+    new Path(s"$root/$name-$hash")
+
+  // ------------------------------------------------------------------
+  // The hit memo (round-19 optimization: artifact-consumer keys spent
+  // 0.6–1.3 s of DRIVER time per call re-deriving an unchanged content
+  // hash — rebuilding the producing frame, walking `inputFiles`,
+  // re-rendering the canonical plan — only to find the same directory
+  // as last time).
+  //
+  // It stores METADATA ONLY — (watched directories, their listing
+  // fingerprint, the semantics-bearing conf fingerprint, the artifact
+  // dir) — never rows. Every call re-verifies freshness from the
+  // filesystem: it re-lists the watched directories and compares. ANY
+  // difference — file added, removed, resized, touched, directory
+  // restructured — or a changed conf, or a vanished _SUCCESS, falls
+  // back to the full derivation (watch → hash → probe/build). A false
+  // MISS only costs speed; a false HIT would need an input mutation
+  // invisible to every watched listing — not a thing on the
+  // local/posix and Hadoop-compatible stores this engine targets.
+  // ------------------------------------------------------------------
+  private case class HitMemo(watchDirs: Seq[String], listingFp: String,
+                             confFp: String, dir: String)
+  private val hitMemo =
+    new java.util.concurrent.ConcurrentHashMap[String, HitMemo]()
+
+  /** Test seam: drops every memoized hit so a suite can simulate a
+    * fresh JVM (the memo is in-process state; producing CODE cannot
+    * change under a live memo, so only tests need this). */
+  private[graft] def clearHitMemo(): Unit = hitMemo.clear()
+
+  /** The hit memos assume a bounded set of (root, name, inputs) per
+    * JVM; a long-lived driver cycling through unbounded roots (every
+    * asOf dir set, say) would otherwise accumulate entries forever
+    * (r19 ADVICE). The cap is far above any real session's working
+    * set, so eviction is a full reset — entries are metadata-only and
+    * rebuild on the next call. */
+  private[engine] val MemoCap = 8192
+  private[engine] def capMemo(m: java.util.concurrent.ConcurrentHashMap[_, _])
+      : Unit =
+    if (m.size > MemoCap) m.clear()
+
+  /** Directory face, and the one install routine behind every face:
+    * `build(dir)` writes the whole artifact tree into the scratch
+    * directory it is handed — a lake table with its own `_graft_log`,
+    * a folder of stable-named shard files, a parquet write with a
+    * custom writer. Everything inside must be root-relative, so the
+    * install rename is semantics-free.
+    *
+    *  - `inputsKey` must uniquely determine the producing computation
+    *    GIVEN the name and the call site within this JVM (callers pass
+    *    the data directory);
+    *  - `watch` names the frames whose input files fingerprint
+    *    freshness; an EMPTY watch set has no freshness check, so such
+    *    a call is never memoized and derives its hash every time
+    *    (checkpoint-backed frames, explicit-hash callers);
+    *  - `hash` is the content hash, evaluated only on a memo miss.
+    * The memo key carries the call site ([[callerTag]]), so two sites
+    * sharing (name, inputsKey) never serve each other's entry. */
+  def directory(spark: SparkSession, root: String, name: String,
+                inputsKey: String)(watch: => Seq[DataFrame])(
+                hash: => String)(build: String => Unit): Installed = {
+    val key = s"$root|$name|$inputsKey|${callerTag()}"
+    val conf = spark.sparkContext.hadoopConfiguration
+    val cf = confFp(spark)
+    val m = hitMemo.get(key)
+    if (m != null && m.confFp == cf &&
+        listingFp(spark, m.watchDirs) == m.listingFp) {
+      val success = new Path(m.dir, "_SUCCESS")
+      val fs = success.getFileSystem(conf)
+      if (fs.exists(success)) {
+        touch(fs, success)
+        return Installed(m.dir, built = false)
+      }
+    }
+    // Fingerprint the inputs BEFORE deriving or building: if a writer
+    // lands between this snapshot and a later hit check, the compare
+    // fails and the full path re-runs — stale-open races only ever
+    // cause recomputation, never a stale serve.
+    val dirs = watchDirs(watch.flatMap(_.inputFiles.toSeq))
+    val fp = listingFp(spark, dirs)
+    val h = hash
+    val dir = artifactDir(root, name, h)
+    val fs = dir.getFileSystem(conf)
+    val success = new Path(dir, "_SUCCESS")
+    val built = !fs.exists(success)
+    if (!built) touch(fs, success)
+    else {
+      sweepStale(fs, new Path(root))
+      val scratch = new Path(
+        s"$root/.inflight-$name-$h-${System.nanoTime()}")
+      build(scratch.toString)
+      fs.create(new Path(scratch, "_SUCCESS"), true).close()
+      // Self-heal: an artifact dir WITHOUT _SUCCESS is a corpse from a
+      // killed run — serving its partial files would be silently
+      // wrong forever. Remove it before installing the fresh copy.
+      if (fs.exists(dir) && !fs.exists(success)) fs.delete(dir, true)
+      // Install unless a concurrent winner appeared. Checking exists(dir)
+      // (not just _SUCCESS) also avoids the local-FS rename fallback that
+      // would "succeed" by nesting scratch INSIDE an existing dir. The
+      // remaining TOCTOU window can only nest a dot-prefixed dir that
+      // parquet readers ignore and the next call's heal branch removes.
+      if (fs.exists(dir) || !fs.rename(scratch, dir))
+        fs.delete(scratch, true)
+    }
+    if (dirs.nonEmpty) {
+      capMemo(hitMemo)
+      hitMemo.put(key, HitMemo(dirs, fp, cf, dir.toString))
+    }
+    Installed(dir.toString, built)
+  }
+
+  /** First stack frame outside this file — folds the CALL SITE into
+    * the memo key, so two call sites that (wrongly or deliberately)
+    * share (name, inputsKey) but build different artifacts can never
+    * serve each other's memoized dir: each site derives fully once —
+    * where the content hash keeps them distinct — and hits only its
+    * own entry thereafter (r19 ADVICE on the hit path's missing hash
+    * check). ~µs per call, in-JVM only. */
+  private def callerTag(): String =
+    new Throwable().getStackTrace
+      .find(e => e.getFileName != null && e.getFileName != "Cache.scala")
+      .map(e => s"${e.getFileName}:${e.getLineNumber}")
+      .getOrElse("unknown")
+
   /** Directories whose listings fingerprint the inputs: every leaf
     * file's parent and grandparent, PLUS every ancestor up to the
     * common root of the leaf set (r19 ADVICE: parent+grandparent
@@ -165,8 +294,8 @@ object ArtifactCache {
     * unrelated trees (artifact cache vs. data dir) don't drag `/`
     * into the watch set; inputs that share no meaningful root (< 2
     * path components in common) contribute only their parent +
-    * grandparent, exactly the old behavior. */
-  private[engine] def watchDirs(files: Seq[String]): Seq[String] = {
+    * grandparent. */
+  private def watchDirs(files: Seq[String]): Seq[String] = {
     val parents = files.map(f => new Path(f).getParent).filter(_ != null)
     val base = parents ++ parents.map(_.getParent).filter(_ != null)
     val comps = parents.distinct.map(_.toString.split('/').toSeq)
@@ -202,16 +331,15 @@ object ArtifactCache {
     * phash pairs read the phash table; incremental-dedup candidates
     * read the band index — and a fingerprint that sees the upstream
     * read's own bookkeeping would self-invalidate every call):
-    *  - `_SUCCESS` fingerprints by PRESENCE only: it is a zero-length
-    *    commit marker whose mtime [[materializeKeyed]] repurposes as
-    *    the LRU touch; its existence matters (half-written artifact
-    *    detection), its mtime is cache metadata, and the data content
-    *    it guards is covered by the sibling part-files' entries.
+    *  - `_SUCCESS` fingerprints by PRESENCE only: its mtime is the
+    *    LRU touch; its existence matters (half-written artifact
+    *    detection), and the data content it guards is covered by the
+    *    sibling files' entries.
     *  - the directory's own mtime is folded in only via the child
     *    list: posix updates it on entry create/delete, which the
     *    sorted child list already captures, while `setTimes` on a
     *    child does not touch it. */
-  private[engine] def listingFp(spark: SparkSession, dirs: Seq[String]): String = {
+  private def listingFp(spark: SparkSession, dirs: Seq[String]): String = {
     val conf = spark.sparkContext.hadoopConfiguration
     dirs.map { ds =>
       val p = new Path(ds)
@@ -227,181 +355,27 @@ object ArtifactCache {
     }.mkString("\n")
   }
 
-  /** [[materialize]] with the producing frame passed BY NAME and an
-    * in-JVM memoized hit path: after one full derivation for a given
-    * (cacheRoot, name, inputsKey), later calls skip rebuilding the
-    * producing frame entirely when the re-listed input fingerprint and
-    * confs are unchanged and the artifact's _SUCCESS still exists.
-    *
-    * `inputsKey` must uniquely determine the producing pipeline GIVEN
-    * the artifact name within this JVM (callers pass the data
-    * directory); two call sites sharing (name, inputsKey) but building
-    * different plans would already be a name-collision hazard in the
-    * slow path's artifact naming discipline. */
-  def materializeLazy(spark: SparkSession, cacheRoot: String, name: String,
-                      inputsKey: String)(produce: => DataFrame): DataFrame =
-    materializeLazyCore(spark, cacheRoot, name, inputsKey,
-                        artifactHash, produce)
-
-  /** [[materializeLazy]] for producing frames whose PLAN hash is not
-    * stable or not sufficient — typed mapPartitions pipelines embed
-    * JVM-specific lambda identities (the [[materializeKeyed]] caveat),
-    * so callers supply the hash themselves (input-frame hash + a
-    * driver-side LOGIC TAG probing the closure's code path, the
-    * doc_phashes posture). `hash` is only evaluated on a memo miss. */
-  def materializeLazyKeyed(spark: SparkSession, cacheRoot: String,
-                           name: String, inputsKey: String,
-                           partitionBy: Seq[String] = Nil,
-                           writerOptions: Map[String, String] = Map.empty)(
-                           hash: => String)(
-                           produce: => DataFrame): DataFrame =
-    materializeLazyCore(spark, cacheRoot, name, inputsKey,
-                        _ => hash, produce, partitionBy, writerOptions)
-
-  /** First stack frame outside this file — folds the CALL SITE into
-    * the memo key, so two call sites that (wrongly or deliberately)
-    * share (name, inputsKey) but build different plans can never
-    * serve each other's memoized artifact dir: each site derives
-    * fully once — where the content hash keeps them distinct — and
-    * hits only its own entry thereafter (r19 ADVICE on the
-    * hit path's missing hash check). ~µs per call, in-JVM only. */
-  private[engine] def callerTag(): String = {
-    val tr = new Throwable().getStackTrace
-    tr.find(e => e.getFileName != null && e.getFileName != "Cache.scala" &&
-                 e.getFileName != "LakeTable.scala")
-      .map(e => s"${e.getFileName}:${e.getLineNumber}")
-      .getOrElse("unknown")
-  }
-
-  /** The hit memos assume a bounded set of (root, name, inputs) per
-    * JVM; a long-lived driver cycling through unbounded roots (every
-    * asOf dir set, say) would otherwise accumulate entries forever
-    * (r19 ADVICE). The cap is far above any real session's working
-    * set, so eviction is a full reset — entries are metadata-only and
-    * rebuild on the next call. */
-  private[engine] val MemoCap = 8192
-  private[engine] def capMemo(m: java.util.concurrent.ConcurrentHashMap[_, _])
-      : Unit =
-    if (m.size > MemoCap) m.clear()
-
-  private def materializeLazyCore(spark: SparkSession, cacheRoot: String,
-                                  name: String, inputsKey: String,
-                                  hashOf: DataFrame => String,
-                                  produce: => DataFrame,
-                                  partitionBy: Seq[String] = Nil,
-                                  writerOptions: Map[String, String] =
-                                    Map.empty): DataFrame = {
-    val key = s"$cacheRoot|$name|$inputsKey|${callerTag()}"
-    val cf = confFp(spark)
-    val m = hitMemo.get(key)
-    if (m != null && m.confFp == cf &&
-        listingFp(spark, m.inputDirs) == m.listingFp) {
-      val dir = new Path(m.dir)
-      val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val success = new Path(dir, "_SUCCESS")
-      if (fs.exists(success)) {
-        if (isLocalFs(dir))
-          try fs.setTimes(success, System.currentTimeMillis(), -1)
-          catch { case _: Exception => () }
-        return spark.read.parquet(m.dir)
-      }
-    }
-    val df = produce
-    val hash = hashOf(df)
-    // Fingerprint the inputs BEFORE serving/computing: if a writer
-    // lands between this snapshot and a later hit check, the compare
-    // fails and the full path re-runs — stale-open races only ever
-    // cause recomputation, never a stale serve.
-    val dirs = watchDirs(df.inputFiles.toSeq)
-    val fp = listingFp(spark, dirs)
-    val out = materializeKeyed(spark, cacheRoot, name, hash,
-                               partitionBy, writerOptions)(df)
-    // A frame with NO file inputs (checkpoint-backed training loops,
-    // LocalRelations) has an empty watch set — a memo would then hit
-    // forever with no freshness check. Such callers keep the full
-    // per-call derivation.
-    if (dirs.nonEmpty) {
-      capMemo(hitMemo)
-      hitMemo.put(key, HitMemo(dirs, fp, cf, s"$cacheRoot/$name-$hash"))
-    }
-    out
-  }
-
-  /** Test seam: drops every memoized hit so a suite can simulate a
-    * fresh JVM (the memo is in-process state; producing CODE cannot
-    * change under a live memo, so only tests need this). */
-  private[graft] def clearHitMemo(): Unit = hitMemo.clear()
-
-  /** Hex digest of raw bytes — the public face of [[md5hex]] for
-    * logic-tag probes (a fixture encoder's output on a fixed probe
-    * image, folded into a keyed artifact's hash so editing the codec
-    * regenerates the artifact instead of serving stale blobs). */
-  def bytesTag(bs: Array[Byte]*): String = {
-    val md = MessageDigest.getInstance("MD5")
-    bs.foreach(md.update)
-    md.digest().map("%02x".format(_)).mkString
-  }
-
-  /** `materialize` with a caller-supplied content hash, for artifacts
-    * whose PRODUCING frame has no stable hash — e.g. an iteratively
-    * trained model whose plan is checkpoint-backed (LogicalRDD ids
-    * change every run). The caller hashes the artifact's INPUTS +
-    * parameters instead; `compute` is only evaluated on a miss.
-    * IMPORTANT: the input hash cannot see the producing CODE — callers
-    * version the artifact name (…_v1) and bump it whenever the
-    * producing algorithm changes, or stale results survive. */
-  def materializeKeyed(spark: SparkSession, cacheRoot: String, name: String,
-                       hash: String, partitionBy: Seq[String] = Nil,
-                       writerOptions: Map[String, String] = Map.empty)(
-                       compute: => DataFrame): DataFrame = {
-    val dir = new Path(s"$cacheRoot/$name-$hash")
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val success = new Path(dir, "_SUCCESS")
-    if (fs.exists(success)) {
-      // LRU touch: _SUCCESS's mtime records last USE, so the age sweep
-      // below only collects artifacts nothing has read in 7 days.
-      // Hashes changed by new inputs/code orphan the old dirs forever —
-      // without this, the cache root grows monotonically across rounds.
-      // Local-FS only, matching the sweep's own guard (see sweepStale).
-      if (isLocalFs(dir))
-        try fs.setTimes(success, System.currentTimeMillis(), -1)
-        catch { case _: Exception => () }
-    } else {
-      sweepStale(fs, new Path(cacheRoot))
-      val scratch = new Path(
-        s"$cacheRoot/.inflight-$name-$hash-${System.nanoTime()}")
-      // writerOptions reach the parquet writer (e.g. parquet.block.size
-      // for a row-group-sized layout artifact). They are NOT part of
-      // the hash: callers that vary options must version the name.
-      val w = compute.write.mode("overwrite").options(writerOptions)
-      (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
-        .parquet(scratch.toString)
-      // Self-heal: an artifact dir WITHOUT _SUCCESS is a corpse from a
-      // killed run — serving its partial part-files would be silently
-      // wrong forever. Remove it before installing the fresh copy.
-      if (fs.exists(dir) && !fs.exists(success)) fs.delete(dir, true)
-      // Install unless a concurrent winner appeared. Checking exists(dir)
-      // (not just _SUCCESS) also avoids the local-FS rename fallback that
-      // would "succeed" by nesting scratch INSIDE an existing dir. The
-      // remaining TOCTOU window can only nest a dot-prefixed dir that
-      // parquet readers ignore and the next call's heal branch removes.
-      if (fs.exists(dir) || !fs.rename(scratch, dir))
-        fs.delete(scratch, true)
-    }
-    spark.read.parquet(dir.toString)
-  }
-
   private def isLocalFs(p: Path): Boolean = {
     val scheme = p.toUri.getScheme
     scheme == null || scheme == "file"
   }
 
+  /** LRU touch: _SUCCESS's mtime records last USE, so the age sweep
+    * only collects artifacts nothing has read in 7 days. Local-FS
+    * only, matching the sweep's own guard (see [[sweepStale]]). */
+  private def touch(fs: org.apache.hadoop.fs.FileSystem,
+                    success: Path): Unit =
+    if (isLocalFs(success))
+      try fs.setTimes(success, System.currentTimeMillis(), -1)
+      catch { case _: Exception => () }
+
   /** Best-effort GC, run only on the (already expensive) miss path:
-    * `.inflight-*` scratch dirs older than 6 h (crashed computes, lost
-    * rename races) and completed artifacts whose _SUCCESS hasn't been
-    * touched in 7 days (orphans from superseded input/code hashes —
-    * hits refresh the mtime, so anything this old is unreachable by
-    * any live hash or genuinely unused).
+    * `.inflight-*` scratch dirs older than 6 h (crashed builds, lost
+    * rename races) and completed artifacts — parquet dirs and lake
+    * trees alike — whose _SUCCESS hasn't been touched in 7 days
+    * (orphans from superseded input/code hashes — hits refresh the
+    * mtime, so anything this old is unreachable by any live hash or
+    * genuinely unused).
     *
     * The age sweep is LOCAL-FS ONLY: object stores (s3a) treat
     * `setTimes` as a no-op, so the LRU touch never lands there and the
@@ -434,24 +408,16 @@ object ArtifactCache {
         }
       }
     } catch { case _: Exception => () }
-
-  /** True iff `materialize` would skip recomputation. */
-  def isCached(df: DataFrame, cacheRoot: String, name: String): Boolean = {
-    val hash = artifactHash(df)
-    val dir = new Path(s"$cacheRoot/$name-$hash/_SUCCESS")
-    val fs = dir.getFileSystem(
-      df.sparkSession.sparkContext.hadoopConfiguration)
-    fs.exists(dir)
-  }
 }
 
 /** Engine-internal artifacts routed through [[ArtifactCache]] — P6
-  * (content-hash stale-skip) applied to the engine's own hot spots.
+  * (content-hash stale-skip) applied to the engine's own hot spots —
+  * plus the naming rule for the cached lake fixtures.
   */
 object Artifacts {
   /** Default artifact root. Per-hash subdirectories make concurrent
     * runs collide only on identical (plan × inputs), where the atomic
-    * rename in `materialize` resolves the race. Overridable via the
+    * install rename resolves the race. Overridable via the
     * `graft.cache.root` system property or `GRAFT_CACHE_ROOT` env var
     * (cold benchmarking isolates itself with a fresh root instead of
     * wiping the shared one; a deployment points it at its artifact
@@ -460,6 +426,18 @@ object Artifacts {
     sys.props.get("graft.cache.root")
       .orElse(sys.env.get("GRAFT_CACHE_ROOT"))
       .getOrElse(s"${System.getProperty("java.io.tmpdir")}/graft_artifact_cache")
+
+  /** Artifact name of a cached lake-table fixture — P6 applied to the
+    * lake/MV keys' multi-version fixture tables (r10 verdict #3):
+    * building one (appends + merge/rewrite commits) is deterministic in
+    * (source content × build spec), so the first invocation pays the
+    * transaction machinery once through [[ArtifactCache.directory]] and
+    * every later invocation replays the commit log only. The suffix is
+    * LakeTable's log-format version, bumped whenever the LOG FORMAT or
+    * layout semantics change (r11 ADVICE #3: content hashes cannot see
+    * the producing code) — fmt3 tags temporal stat kinds, so trees
+    * built under an older format would serve stale stats. */
+  def lakeFixture(name: String): String = s"$name-fmt3"
 
   /** The verified near-dup pair list (id1, id2, jaccard) for the
     * documents table — the shared upstream of docs_dedup_near /
@@ -471,10 +449,12 @@ object Artifacts {
     * the pair list is tiny relative to the corpus, and the content
     * hash re-runs the pipeline iff the corpus or the pipeline
     * changed. */
-  def nearDupPairs(s: org.apache.spark.sql.SparkSession,
-                   dataDir: String): DataFrame =
-    ArtifactCache.materializeLazy(s, cacheRoot, "neardup_pairs", dataDir)(
-      Ops.minhashNearDup(Tables.documents(s, dataDir), "doc_id", "text"))
+  def nearDupPairs(s: SparkSession, dataDir: String): DataFrame = {
+    lazy val pairs =
+      Ops.minhashNearDup(Tables.documents(s, dataDir), "doc_id", "text")
+    ArtifactCache.materialize(s, cacheRoot, "neardup_pairs", dataDir)(
+      Seq(pairs))(ArtifactCache.artifactHash(pairs))(pairs)
+  }
 
   /** The LSH band index (band, bh, doc_id) of the BASE corpus slice
     * (doc_id ≢ 0 mod 3) — the persisted half of incremental dedup:
@@ -483,16 +463,15 @@ object Artifacts {
     * 100 TB this is the index a daily-ingest dedup keeps warm;
     * O(corpus) rows but 24 bytes each, hash-partitioned on the
     * (band, bh) probe key. */
-  def baseBandIndex(s: org.apache.spark.sql.SparkSession,
-                    dataDir: String): DataFrame = {
+  def baseBandIndex(s: SparkSession, dataDir: String): DataFrame = {
     import org.apache.spark.sql.functions.col
-    ArtifactCache.materializeLazy(s, cacheRoot, "neardup_base_bands_v1",
-      dataDir)(
-      Ops.lshBandIndex(
-        Ops.shingles(
-          Tables.documents(s, dataDir).filter(!(col("doc_id") % 3 === 0)),
-          "doc_id", "text", 5),
-        "doc_id"))
+    lazy val bands = Ops.lshBandIndex(
+      Ops.shingles(
+        Tables.documents(s, dataDir).filter(!(col("doc_id") % 3 === 0)),
+        "doc_id", "text", 5),
+      "doc_id")
+    ArtifactCache.materialize(s, cacheRoot, "neardup_base_bands_v1",
+      dataDir)(Seq(bands))(ArtifactCache.artifactHash(bands))(bands)
   }
 
   /** The pruned tf-idf posting index (doc_id, term, wt) for the
@@ -504,26 +483,35 @@ object Artifacts {
     * is exactly the index artifact an IR pipeline persists between
     * build and query: corpus-scale but heavily pruned, rebuilt iff
     * the corpus or the derivation changed (content hash). */
-  def sparsePostings(s: org.apache.spark.sql.SparkSession,
-                     dataDir: String): DataFrame =
-    ArtifactCache.materializeLazy(s, cacheRoot, "sparse_postings_v1",
-      dataDir)(
-      QueriesR11.sparseSimWeights(s, dataDir))
+  def sparsePostings(s: SparkSession, dataDir: String): DataFrame = {
+    lazy val postings = QueriesR11.sparseSimWeights(s, dataDir)
+    ArtifactCache.materialize(s, cacheRoot, "sparse_postings_v1", dataDir)(
+      Seq(postings))(ArtifactCache.artifactHash(postings))(postings)
+  }
+
+  /** An embeddings-derived artifact keyed on the INPUT frame's hash:
+    * the producing frames below are checkpoint-backed or stream
+    * driver-broadcast blocks, so their own plans have no stable hash.
+    * The name carries the hyperparameters and a version, bumped
+    * whenever the producing algorithm changes. */
+  private def fromEmbeddings(s: SparkSession, dataDir: String, name: String,
+                             e: DataFrame)(produce: => DataFrame): DataFrame =
+    ArtifactCache.materialize(s, cacheRoot, name, dataDir)(Seq(e))(
+      ArtifactCache.artifactHash(e))(produce)
+
+  private def embeddings(s: SparkSession, dataDir: String): DataFrame =
+    Tables.embeddings(s, dataDir).select("vec_id", "embedding")
 
   /** The trained IVF codebook (Ops.kmeansCodebook) for the embeddings
     * table — a model artifact: trained once per (input fingerprint ×
     * hyperparameters), then reused by every index/probe/eval key
-    * (emb_ann_ivf, emb_ivf_recall). Keyed via `materializeKeyed` on
-    * the INPUT's hash because the trained frame itself is
-    * checkpoint-backed (no stable plan hash). This is exactly how a
-    * 100 TB deployment treats a codebook: a tiny persisted artifact,
+    * (emb_ann_ivf, emb_ivf_recall). This is exactly how a 100 TB
+    * deployment treats a codebook: a tiny persisted artifact,
     * retrained only when the corpus or the hyperparameters change. */
-  def ivfCodebook(s: org.apache.spark.sql.SparkSession, dataDir: String,
-                  k: Int = 16, iters: Int = 3): DataFrame = {
-    val e = Tables.embeddings(s, dataDir).select("vec_id", "embedding")
-    ArtifactCache.materializeKeyed(
-      s, cacheRoot, s"ivf_codebook_v1_k${k}_i$iters",
-      ArtifactCache.artifactHash(e))(
+  def ivfCodebook(s: SparkSession, dataDir: String, k: Int = 16,
+                  iters: Int = 3): DataFrame = {
+    val e = embeddings(s, dataDir)
+    fromEmbeddings(s, dataDir, s"ivf_codebook_v1_k${k}_i$iters", e)(
       Ops.kmeansCodebook(e, "vec_id", "embedding", k, iters))
   }
 
@@ -531,18 +519,12 @@ object Artifacts {
     * (vec_id ≢ 0 mod 7) — the incremental-ingest story's frozen
     * model (emb_ann_incremental): delta vectors are assigned to
     * these cells WITHOUT retraining, exactly how a production index
-    * absorbs a daily batch (retrains are scheduled, not per-ingest).
-    * Same materializeKeyed posture as ivfCodebook. */
-  def ivfCodebookBase(s: org.apache.spark.sql.SparkSession,
-                      dataDir: String, k: Int = 16,
+    * absorbs a daily batch (retrains are scheduled, not per-ingest). */
+  def ivfCodebookBase(s: SparkSession, dataDir: String, k: Int = 16,
                       iters: Int = 3): DataFrame = {
     import org.apache.spark.sql.functions.col
-    val e = Tables.embeddings(s, dataDir)
-      .filter(!(col("vec_id") % 7 === 0))
-      .select("vec_id", "embedding")
-    ArtifactCache.materializeKeyed(
-      s, cacheRoot, s"ivf_codebook_base7_v1_k${k}_i$iters",
-      ArtifactCache.artifactHash(e))(
+    val e = embeddings(s, dataDir).filter(!(col("vec_id") % 7 === 0))
+    fromEmbeddings(s, dataDir, s"ivf_codebook_base7_v1_k${k}_i$iters", e)(
       Ops.kmeansCodebook(e, "vec_id", "embedding", k, iters))
   }
 
@@ -550,37 +532,28 @@ object Artifacts {
     * ground-truth artifact: `emb_knn_bruteforce` serves it directly and
     * `emb_ivf_recall` reads its top-3 prefix (a bounded top-k under a
     * fixed order rule is prefix-closed, so the k=5 list's first 3 rows
-    * ARE the k=3 result). Keyed on the input: the kernel streams
-    * driver-broadcast blocks, so its own plan has no stable hash. */
-  def knnTop5(s: org.apache.spark.sql.SparkSession,
-              dataDir: String): DataFrame = {
-    val e = Tables.embeddings(s, dataDir).select("vec_id", "embedding")
-    ArtifactCache.materializeKeyed(s, cacheRoot, "knn_top5_v1",
-      ArtifactCache.artifactHash(e))(
+    * ARE the k=3 result). */
+  def knnTop5(s: SparkSession, dataDir: String): DataFrame = {
+    val e = embeddings(s, dataDir)
+    fromEmbeddings(s, dataDir, "knn_top5_v1", e)(
       Ops.knnBruteForce(e, "vec_id", "embedding", k = 5))
   }
 
   /** The PQ index (Ops.pqEncode: 8 subspaces × 16 centroids → 8
     * four-bit codes per vector) for the embeddings table — the
     * compressed-store artifact an ADC search scans instead of the
-    * floats. Keyed on the input fingerprint like the codebook: encode
-    * once per corpus, reuse across every query. */
-  def pqCodes(s: org.apache.spark.sql.SparkSession,
-              dataDir: String): DataFrame = {
-    val e = Tables.embeddings(s, dataDir).select("vec_id", "embedding")
-    ArtifactCache.materializeKeyed(s, cacheRoot, "pq_codes_v1_m8_k16",
-      ArtifactCache.artifactHash(e))(
+    * floats. Encode once per corpus, reuse across every query. */
+  def pqCodes(s: SparkSession, dataDir: String): DataFrame = {
+    val e = embeddings(s, dataDir)
+    fromEmbeddings(s, dataDir, "pq_codes_v1_m8_k16", e)(
       Ops.pqEncode(e, "vec_id", "embedding"))
   }
 
   /** The IVF ANN result (k=3, nprobe=4, trained 16×3 codebook) —
-    * shared by `emb_ann_ivf` and `emb_ivf_recall`. Name carries the
-    * hyperparameters; hash carries the corpus fingerprint. */
-  def annIvfTop3(s: org.apache.spark.sql.SparkSession,
-                 dataDir: String): DataFrame = {
-    val e = Tables.embeddings(s, dataDir).select("vec_id", "embedding")
-    ArtifactCache.materializeKeyed(s, cacheRoot, "ann_ivf_v1_k3_np4_c16i3",
-      ArtifactCache.artifactHash(e))(
+    * shared by `emb_ann_ivf` and `emb_ivf_recall`. */
+  def annIvfTop3(s: SparkSession, dataDir: String): DataFrame = {
+    val e = embeddings(s, dataDir)
+    fromEmbeddings(s, dataDir, "ann_ivf_v1_k3_np4_c16i3", e)(
       Ops.annIvf(e, "vec_id", "embedding", ivfCodebook(s, dataDir),
                  k = 3, nprobe = 4))
   }

@@ -292,7 +292,9 @@ object LakeSql {
 
     /** Attach an EXISTING lake table under `name`. */
     def attach(name: String, root: String): this.type = {
-      roots(name.toLowerCase) = root; this
+      roots(name.toLowerCase) = root
+      views -= name.toLowerCase
+      this
     }
 
     def tableRoot(name: String): String =
@@ -334,20 +336,31 @@ object LakeSql {
       * re-registered only when the table's latest committed version
       * differs from the one the live view was built from (one log
       * listing instead of a replay; any write — append, delete,
-      * optimize — bumps the version by the commit contract). */
-    private val viewVersions =
-      scala.collection.mutable.Map.empty[String, Long]
+      * optimize — bumps the version by the commit contract).
+      *
+      * The skip is safe only while the live view is the one this
+      * session built: the record is keyed on (root, version), `attach`
+      * drops it, and the catalog must still hold the very relation
+      * registered here — another Session on the same SparkSession (or
+      * any other writer of the name) replaces it, which forces a
+      * rebuild, as the MV ownership check does for REFRESH. */
+    private val views = mutable.Map.empty[String, (String, Long,
+      org.apache.spark.sql.catalyst.catalog.TemporaryViewRelation)]
 
-    private def refreshViews(): Unit =
+    private def refreshViews(): Unit = {
+      val catalog = spark.sessionState.catalog
       roots.foreach { case (n, r) =>
         val v = LakeTable.latestVersion(spark, r).getOrElse(-1L)
-        if (!viewVersions.get(n).contains(v)) {
-          snapshot(r).foreach { df =>
-            df.createOrReplaceTempView(n)
-            viewVersions(n) = v
-          }
+        val live = views.get(n).exists { case (root, version, rel) =>
+          root == r && version == v &&
+            catalog.getRawTempView(n).exists(_ eq rel)
+        }
+        if (!live) snapshot(r).foreach { df =>
+          df.createOrReplaceTempView(n)
+          catalog.getRawTempView(n).foreach(rel => views(n) = (r, v, rel))
         }
       }
+    }
 
     /** Standard SQL write coercion: incoming rows CAST to the target
       * table's column types by name (an INT literal inserts into a

@@ -1465,106 +1465,3 @@ private[graft] object CommitFault {
   @volatile var hook: (String, String, Long) => Unit = (_, _, _) => ()
   def reset(): Unit = hook = (_, _, _) => ()
 }
-
-/** Content-addressed CACHED lake-table roots — P6 applied to the
-  * lake keys' multi-version fixture tables (r10 verdict #3): building
-  * a fixture (appends + merge/rewrite commits) is deterministic in
-  * (source content × build spec), so the first invocation pays the
-  * transaction machinery once into the shared artifact root and every
-  * later Verify/Bench invocation replays the commit log only — the
-  * bench rows time the READ path the keys exist to prove, and /tmp no
-  * longer accretes one full table copy per invocation (the r10 ADVICE
-  * leak). Same install discipline as [[ArtifactCache]]: build into an
-  * `.inflight-` scratch, mark ready, rename into place; a corpse
-  * without the ready marker is healed, a lost rename race discards
-  * the scratch copy. (A lake root is a directory tree with its own
-  * `_graft_log`, not a single parquet dir — hence this sibling of
-  * `materializeKeyed` rather than a reuse: the ready marker plays
-  * _SUCCESS's role for the whole tree, and everything in the log is
-  * root-relative so the rename is semantics-free.) */
-object LakeFixtures {
-  private val ReadyMarker = "_GRAFT_LAKE_READY"
-
-  /** Folded into every cached-fixture key and bumped whenever
-    * LakeTable's LOG FORMAT or layout semantics change (r11 ADVICE
-    * #3: content hashes cannot see the producing code) — fmt2 added
-    * colkinds + per-file stats + the filesPerDir z-layout, so trees
-    * built under fmt1 would serve stale stats to the new read path. */
-  private val FormatVersion = "fmt3"
-
-  /** Returns the root of the cached fixture named `name` for content
-    * `hash`, building it via `build(root)` on a miss. */
-  def cached(spark: SparkSession, name: String, hash: String)(
-      build: String => Unit): String = {
-    val dir = new Path(s"${Artifacts.cacheRoot}/$name-$FormatVersion-$hash")
-    val f = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val ready = new Path(dir, ReadyMarker)
-    if (!f.exists(ready)) {
-      val scratch = new Path(
-        s"${Artifacts.cacheRoot}/.inflight-$name-$hash-${System.nanoTime()}")
-      build(scratch.toString)
-      f.create(new Path(scratch, ReadyMarker), true).close()
-      // heal a corpse from a killed build, then install unless a
-      // concurrent winner appeared (the ArtifactCache rename race)
-      if (f.exists(dir) && !f.exists(ready)) f.delete(dir, true)
-      if (f.exists(dir) || !f.rename(scratch, dir))
-        f.delete(scratch, true)
-    }
-    dir.toString
-  }
-
-  // ------------------------------------------------------------------
-  // Fast HIT path (r19 optimization, the ArtifactCache.materializeLazy
-  // discipline applied to fixture ROOTS): ~34 lake/MV keys re-derived
-  // their fixture content hash per call — each an analyzed-plan render
-  // + an inputFiles stat walk (0.1–0.4 s of driver time) — only to
-  // find the same ready tree. The memo stores METADATA ONLY (watched
-  // source-dir listing fingerprint, conf fingerprint, resolved root);
-  // every call re-lists the SOURCE TABLE directories and falls back to
-  // the full hash derivation on any change, vanished ready marker, or
-  // semantics-bearing conf change. A false miss only costs speed.
-  // ------------------------------------------------------------------
-  private case class RootMemo(dirs: Seq[String], fp: String,
-                              cf: String, root: String)
-  private val rootMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, RootMemo]()
-
-  /** Test seam, mirroring ArtifactCache.clearHitMemo. */
-  private[graft] def clearRootMemo(): Unit = rootMemo.clear()
-
-  /** [[cached]] with the hash passed BY NAME and an in-JVM memoized
-    * hit path. `watch` supplies the source frames whose input files
-    * fingerprint freshness (evaluated only on a miss — later calls
-    * re-LIST the recorded directories, never rebuild the frames);
-    * `hash` is the same content hash callers passed to [[cached]]. */
-  def cachedLazy(spark: SparkSession, name: String, inputsKey: String)(
-      watch: => Seq[DataFrame])(hash: => String)(
-      build: String => Unit): String = {
-    // call site in the key (the ArtifactCache.materializeLazyCore
-    // discipline): sites sharing (name, inputsKey) — mv_star does,
-    // deliberately — memoize separately and can never serve each
-    // other's entry; the content hash keeps their roots consistent.
-    val key = s"$name|$inputsKey|${ArtifactCache.callerTag()}"
-    val cf = ArtifactCache.confFp(spark)
-    val m = rootMemo.get(key)
-    if (m != null && m.cf == cf &&
-        ArtifactCache.listingFp(spark, m.dirs) == m.fp) {
-      val ready = new Path(m.root, ReadyMarker)
-      val f = ready.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (f.exists(ready)) return m.root
-    }
-    val dirs = ArtifactCache.watchDirs(watch.flatMap(_.inputFiles.toSeq))
-    // snapshot the listing BEFORE deriving/building: a writer landing
-    // in between fails the next hit compare and re-derives — stale
-    // races only ever cause recomputation, never a stale root
-    val fp = ArtifactCache.listingFp(spark, dirs)
-    val root = cached(spark, name, hash)(build)
-    // empty watch set = no freshness check — never memoize it (the
-    // ArtifactCache.materializeLazyCore guard)
-    if (dirs.nonEmpty) {
-      ArtifactCache.capMemo(rootMemo)
-      rootMemo.put(key, RootMemo(dirs, fp, cf, root))
-    }
-    root
-  }
-}

@@ -252,20 +252,17 @@ object Ops {
     // re-hashing the delta every run.
     // memoKey (r19 optimization): callers whose (base index × delta)
     // is identified by a stable key (the batch-query keys pass the
-    // data dir) ride the materializeLazy hit path — the wide
-    // delta-minhash plan (lazy vals above) is never even ANALYZED on
-    // a fresh hit; the streaming ingest passes None (its base frames
-    // carry checkpoint-backed exclusion joins with no stable plan
-    // hash) and keeps the per-call derivation.
-    val cand = memoKey match {
-      case Some(k) => ArtifactCache.materializeLazy(
-        baseDocs.sparkSession, Artifacts.cacheRoot,
-        "neardup_incr_cand_v1", k)(
-        candBase.unionByName(candDelta).distinct())
-      case None => ArtifactCache.materialize(
-        candBase.unionByName(candDelta).distinct(),
-        Artifacts.cacheRoot, "neardup_incr_cand_v1")
-    }
+    // data dir) watch the candidate frame's inputs and ride the hit
+    // memo — the wide delta-minhash plan (lazy vals above) is never
+    // even ANALYZED on a fresh hit; the streaming ingest passes None
+    // (its base frames carry checkpoint-backed exclusion joins that no
+    // input listing can see), so it watches nothing and keeps the
+    // per-call derivation.
+    lazy val allCand = candBase.unionByName(candDelta).distinct()
+    val cand = ArtifactCache.materialize(baseDocs.sparkSession,
+      Artifacts.cacheRoot, "neardup_incr_cand_v1", memoKey.getOrElse(""))(
+      if (memoKey.isDefined) Seq(allCand) else Nil)(
+      ArtifactCache.artifactHash(allCand))(allCand)
     // Verification shingles come from DOCS pruned to candidate ids
     // BEFORE the explode — the semi join sits on the raw (id, text)
     // rows, so the base corpus is never re-shingled wholesale; only

@@ -54,7 +54,8 @@ object PipelineConfig {
 
   /** One executed (or planned) stage: `cacheHit` is Some(hit) for
     * "cache": true stages — whether the artifact already existed
-    * BEFORE this run — and None for uncached ones; `ms` covers stage
+    * BEFORE this run, always false for a stage with no file inputs to
+    * hash — and None for uncached ones; `ms` covers stage
     * construction + (for cached stages) materialization; `wave` is
     * the stage's DAG level (see `waves`). */
   case class StageRun(name: String, kind: String, cache: Boolean,
@@ -104,18 +105,30 @@ object PipelineConfig {
     pipeline.cacheRoot.getOrElse(
       System.getProperty("java.io.tmpdir") + "/graft_artifacts")
 
+  /** The content hash of a `"cache": true` stage, or None when its
+    * frame has no file inputs (checkpoint-backed training loops,
+    * in-memory relations): the plan string cannot capture such data,
+    * so the stage runs and writes uncached and says so on stderr. */
+  private def cacheHash(st: Stage, base: DataFrame): Option[String] =
+    if (!st.cache) None
+    else if (base.inputFiles.isEmpty) {
+      System.err.println(s"[pipeline] WARN stage '${st.name}': " +
+        "\"cache\": true ignored, its frame has no file inputs to " +
+        "hash; running it uncached")
+      None
+    } else Some(ArtifactCache.artifactHash(base))
+
   private def runStage(spark: SparkSession, sfDir: String,
                        pipeline: Pipeline, st: Stage,
                        wave: Int): StageRun = {
     val t0 = System.nanoTime()
     val base = stageBase(spark, sfDir, st)
-    val hit =
-      if (st.cache)
-        Some(ArtifactCache.isCached(base, rootOf(pipeline), st.name))
-      else None
-    val df =
-      if (st.cache) ArtifactCache.materialize(base, rootOf(pipeline), st.name)
-      else base
+    val cached = cacheHash(st, base).map { h =>
+      ArtifactCache.directory(spark, rootOf(pipeline), st.name, "")(Nil)(h)(
+        base.write.mode("overwrite").parquet(_))
+    }
+    val df = cached.fold(base)(a => spark.read.parquet(a.dir))
+    val hit = if (st.cache) Some(cached.exists(!_.built)) else None
     df.createOrReplaceTempView(st.name)
     StageRun(st.name, if (st.query.isDefined) "query" else "sql",
              st.cache, hit, (System.nanoTime() - t0) / 1000000L, wave, df)
@@ -177,20 +190,16 @@ object PipelineConfig {
     pipeline.stages.map { st =>
       val t0 = System.nanoTime()
       val base = stageBase(spark, sfDir, st)
-      val hit =
-        if (st.cache)
-          Some(ArtifactCache.isCached(base, rootOf(pipeline), st.name))
-        else None
+      val dir = cacheHash(st, base).flatMap(
+        ArtifactCache.lookup(spark, rootOf(pipeline), st.name, _))
+      val hit = if (st.cache) Some(dir.isDefined) else None
       // For an already-cached stage, register the ARTIFACT's parquet
       // frame as the view — what runStage registers — so a cached SQL
       // stage downstream of another cached stage hashes the same
       // analyzed plan in the dry run as in the real run (a base-frame
-      // view made chained cached stages report false misses). The
-      // materialize call on a hit only opens the parquet footer.
-      val view =
-        if (hit.contains(true))
-          ArtifactCache.materialize(base, rootOf(pipeline), st.name)
-        else base
+      // view made chained cached stages report false misses). Reading
+      // the artifact back only opens the parquet footer.
+      val view = dir.fold(base)(spark.read.parquet(_))
       view.createOrReplaceTempView(st.name)
       StageRun(st.name, if (st.query.isDefined) "query" else "sql",
                st.cache, hit, (System.nanoTime() - t0) / 1000000L,

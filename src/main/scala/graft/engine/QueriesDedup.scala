@@ -91,9 +91,10 @@ object QueriesDedup {
     // Same P6 artifact treatment as the word-shingle pair list
     // (Artifacts.nearDupPairs): the char-gram LSH pipeline materializes
     // once per (plan × corpus fingerprint).
-    ArtifactCache.materializeLazy(s, Artifacts.cacheRoot,
-      "ngram_jaccard_pairs", d)(
-      Ops.minhashNearDupFrom(g, "doc_id", threshold = 0.8))
+    lazy val pairs = Ops.minhashNearDupFrom(g, "doc_id", threshold = 0.8)
+    ArtifactCache.materialize(s, Artifacts.cacheRoot,
+      "ngram_jaccard_pairs", d)(Seq(pairs))(ArtifactCache.artifactHash(pairs))(
+      pairs)
       .orderBy("id1", "id2")
   }
 

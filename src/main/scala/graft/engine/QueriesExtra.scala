@@ -289,8 +289,8 @@ object QueriesExtra {
     // cycling arm), so editing the pixel model or the PNG writer
     // regenerates the artifact. The DECODE side of every consumer
     // stays live per-call compute.
-    ArtifactCache.materializeLazyKeyed(s, Artifacts.cacheRoot,
-      "doc_png_blobs_v1", d)(
+    ArtifactCache.materialize(s, Artifacts.cacheRoot,
+      "doc_png_blobs_v1", d)(Seq(documents(s, d)))(
       ArtifactCache.artifactHash(
         documents(s, d).select(col("doc_id"), col("n_chars"))) + "-L" +
         ArtifactCache.bytesTag(

@@ -100,9 +100,9 @@ object QueriesR10 {
   def embRecallMatrix(s: SparkSession, d: String): DataFrame = {
     Exprs.register(s); TopK.register(s)
     val emb = embeddings(s, d).select(col("vec_id"), col("embedding"))
-    ArtifactCache.materializeLazyKeyed(
+    ArtifactCache.materialize(
       s, Artifacts.cacheRoot, "ann_recall_matrix_v1_top3_q10", d)(
-      ArtifactCache.artifactHash(emb)) {
+      Seq(emb))(ArtifactCache.artifactHash(emb)) {
       val exact = Artifacts.knnTop5(s, d)
         .filter(col("rk") <= 3 && col("vec_id") % 10 === 0)
         .select("vec_id", "neighbor_id")
@@ -220,16 +220,13 @@ object QueriesR10 {
         "zorder2(greatest(0L, least(4095L, " +
           "CAST(datediff(l_shipdate, DATE '1995-01-01') AS BIGINT))), " +
           "l_partkey & 4095)"))
-    ArtifactCache.materializeLazyKeyed(
-      s, Artifacts.cacheRoot, "zdpp_lineitem_v1", d,
-      partitionBy = Seq("l_year"),
-      writerOptions = Map(
-        "parquet.block.size" -> "65536",
-        "parquet.page.size" -> "4096",
-        "parquet.enable.dictionary" -> "false"))(
+    s.read.parquet(ArtifactCache.directory(
+      s, Artifacts.cacheRoot, "zdpp_lineitem_v1", d)(Seq(src))(
       ArtifactCache.artifactHash(src))(
       src.repartitionByRange(8, col("l_year"), col("z"))
-        .sortWithinPartitions("l_year", "z"))
+        .sortWithinPartitions("l_year", "z")
+        .write.mode("overwrite").partitionBy("l_year")
+        .options(QueriesR9.smallRowGroups).parquet(_)).dir)
   }
 
   /** DPP × Z-order composed on one scan — the round-6 verdict's
@@ -266,21 +263,16 @@ object QueriesR10 {
     * `c_custkey % 3`) — the layout an ingest drop-folder actually has,
     * where per-file provenance matters. Spark's writer names parts
     * non-deterministically, so the builder writes each shard alone and
-    * renames its part-file to the stable name inside a scratch dir,
-    * then installs the whole directory atomically (same race posture
-    * as ArtifactCache.materializeKeyed: winners rename, losers
-    * discard; `_SUCCESS` marks completeness). */
+    * renames its part-file to the stable name; the artifact cache
+    * installs the whole directory. */
   private def lineageShards(s: SparkSession, d: String): String = {
     import org.apache.hadoop.fs.Path
     val src = customer(s, d)
       .select(col("c_custkey"), col("c_mktsegment"), col("c_acctbal"))
-    val hash = ArtifactCache.artifactHash(src)
-    val dir = new Path(s"${Artifacts.cacheRoot}/glob_shards_v1-$hash")
-    val fs = dir.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val success = new Path(dir, "_SUCCESS")
-    if (!fs.exists(success)) {
-      val scratch = new Path(
-        s"${Artifacts.cacheRoot}/.inflight-glob_shards_v1-$hash-${System.nanoTime()}")
+    ArtifactCache.directory(s, Artifacts.cacheRoot, "glob_shards_v1", d)(
+      Seq(src))(ArtifactCache.artifactHash(src)) { scratch =>
+      val fs = new Path(scratch)
+        .getFileSystem(s.sparkContext.hadoopConfiguration)
       (0 until 3).foreach { i =>
         val tmp = new Path(scratch, s"tmp$i")
         src.filter(col("c_custkey") % 3 === i)
@@ -291,12 +283,7 @@ object QueriesR10 {
         fs.rename(part, new Path(scratch, s"shard$i.parquet"))
         fs.delete(tmp, true)
       }
-      fs.create(new Path(scratch, "_SUCCESS")).close()
-      if (fs.exists(dir) && !fs.exists(success)) fs.delete(dir, true)
-      if (fs.exists(dir) || !fs.rename(scratch, dir))
-        fs.delete(scratch, true)
-    }
-    dir.toString
+    }.dir
   }
 
   /** SURVEY §2.1-P2: glob/multi-file scan with FILE LINEAGE — the

@@ -176,9 +176,8 @@ object QueriesR13 {
       val dec = Png.decodeGray8Pixels(blob)
       Png.dhash64(dec.pixels, dec.width, dec.height)
     }
-    ArtifactCache.materializeLazyKeyed(s, Artifacts.cacheRoot,
-      "doc_phashes_v1", d)(
-      ArtifactCache.artifactHash(docs) + "-L" + logicTag) {
+    ArtifactCache.materialize(s, Artifacts.cacheRoot, "doc_phashes_v1", d)(
+      Seq(docs))(ArtifactCache.artifactHash(docs) + "-L" + logicTag) {
       QueriesExtra.docPngBlobs(s, d)
         .as[(Long, Array[Byte])]
         .mapPartitions(_.map { case (id, blob) =>
@@ -410,13 +409,14 @@ object QueriesR13 {
     * cache — the pagerank-edges discipline; without it Catalyst
     * re-derives the lineitem⋈part+distinct subtree per reference. */
   def basketAssocRules(s: SparkSession, d: String): DataFrame = {
-    val items = ArtifactCache.materializeLazy(s, Artifacts.cacheRoot,
-      "basket_items_v1", d)(
-      lineitem(s, d).select("l_orderkey", "l_partkey")
-        .join(part(s, d).select("p_partkey", "p_brand"),
-              col("l_partkey") === col("p_partkey"))
-        .select(col("l_orderkey").as("okey"), col("p_brand").as("item"))
-        .distinct())
+    lazy val baskets = lineitem(s, d).select("l_orderkey", "l_partkey")
+      .join(part(s, d).select("p_partkey", "p_brand"),
+            col("l_partkey") === col("p_partkey"))
+      .select(col("l_orderkey").as("okey"), col("p_brand").as("item"))
+      .distinct()
+    val items = ArtifactCache.materialize(s, Artifacts.cacheRoot,
+      "basket_items_v1", d)(Seq(baskets))(
+      ArtifactCache.artifactHash(baskets))(baskets)
     val tot = items.agg(countDistinct("okey").as("n_baskets"))
     val cnt = items.groupBy("item").agg(count(lit(1)).as("n_item"))
     // r20 (guide §2.3 "shuffle fewer bytes" — verdict r19 #4): count

@@ -135,8 +135,8 @@ object QueriesR15 {
     // encodes (restart and no-restart arms) through the SAME encoder,
     // so editing the pixel model or the JPEG writer regenerates the
     // artifact. Decode stays live per call.
-    ArtifactCache.materializeLazyKeyed(s, Artifacts.cacheRoot,
-      "doc_jpeg_blobs_v1", d)(
+    ArtifactCache.materialize(s, Artifacts.cacheRoot,
+      "doc_jpeg_blobs_v1", d)(Seq(documents(s, d)))(
       ArtifactCache.artifactHash(documents(s, d).select(col("doc_id"))) +
         "-L" + ArtifactCache.bytesTag(
           Jpeg.encodeGray8(16, 8, (x, y) => 2 * ((x / 8 + y / 8 * 2) * 7 % 128),
@@ -221,16 +221,17 @@ object QueriesR15 {
   def lakeTimeTravel(s: SparkSession, d: String): DataFrame = {
     val base = lakeBase(s, d)
     // The fixture table is a P6 artifact (content-hash on the source;
-    // LakeFixtures): the transaction machinery runs once per corpus,
+    // Artifacts.lakeFixture): the transaction machinery runs once per corpus,
     // then every invocation times the log-replay READ path — and /tmp
     // no longer accretes a table copy per run. Build versions are
     // deterministic: 0, 1 = the two appends, 2 = the compaction.
-    val root = LakeFixtures.cachedLazy(s, "lake_tt_v1", d)(Seq(base))(
+    val root = ArtifactCache.directory(s, Artifacts.cacheRoot,
+        Artifacts.lakeFixture("lake_tt_v1"), d)(Seq(base))(
       ArtifactCache.artifactHash(base)) { r =>
       LakeTable.append(base.filter(col("key") % 3 === 0), r)
       LakeTable.append(base.filter(col("key") % 3 === 1), r)
       LakeTable.rewrite(LakeTable.read(s, r), r)
-    }
+    }.dir
     Seq(0L, 1L, 2L)
       .map(v => LakeTable.read(s, root, Some(v))
         .groupBy("status")
@@ -295,7 +296,8 @@ object QueriesR15 {
     // updates) — either table changing rebuilds the fixture
     def hash = ArtifactCache.artifactHash(base).take(16) +
       ArtifactCache.artifactHash(updates).take(16)
-    val root = LakeFixtures.cachedLazy(s, "lake_merge_v1", d)(
+    val root = ArtifactCache.directory(s, Artifacts.cacheRoot,
+        Artifacts.lakeFixture("lake_merge_v1"), d)(
       Seq(base, updates))(hash) { r =>
       LakeTable.append(base, r)
       val merged = LakeTable.read(s, r)
@@ -303,7 +305,7 @@ object QueriesR15 {
         .select(col("key"),
                 coalesce(col("new_status"), col("status")).as("status"))
       LakeTable.rewrite(merged, r)
-    }
+    }.dir
     (root, 0L, 1L)
   }
 
@@ -400,10 +402,11 @@ object QueriesR15 {
               round(col("o_totalprice"), 2)
                 .cast(DecimalType(18, 2)).as("price"))
       .withColumn("yr", substring(col("odate"), 1, 4))
-    val root = LakeFixtures.cachedLazy(s, "lake_skip_v1", d)(Seq(base))(
+    val root = ArtifactCache.directory(s, Artifacts.cacheRoot,
+        Artifacts.lakeFixture("lake_skip_v1"), d)(Seq(base))(
       ArtifactCache.artifactHash(base)) { r =>
       LakeTable.appendPartitioned(base, r, "yr", "odate")
-    }
+    }.dir
     LakeTable.readRange(s, root, "odate", "1994-01-01", "1995-12-31")
       .groupBy(substring(col("odate"), 1, 7).as("month"))
       .agg(count(lit(1)).as("n_orders"),
@@ -430,12 +433,13 @@ object QueriesR15 {
       .select(col("o_orderkey").as("key"),
               col("o_orderstatus").as("status"),
               col("o_orderpriority").as("priority"))
-    val root = LakeFixtures.cachedLazy(s, "lake_evo_v1", d)(Seq(base))(
+    val root = ArtifactCache.directory(s, Artifacts.cacheRoot,
+        Artifacts.lakeFixture("lake_evo_v1"), d)(Seq(base))(
       ArtifactCache.artifactHash(base)) { r =>
       LakeTable.append(base.filter(col("key") % 2 === 0)
         .drop("priority"), r)
       LakeTable.append(base.filter(col("key") % 2 === 1), r)
-    }
+    }.dir
     LakeTable.read(s, root)
       .groupBy("status", "priority")
       .agg(count(lit(1)).as("n"))
@@ -502,12 +506,13 @@ object QueriesR15 {
               col("o_orderdate").cast("date").cast("string").as("odate"),
               round(col("o_totalprice"), 2)
                 .cast(DecimalType(18, 2)).as("price"))
-    val root = LakeFixtures.cachedLazy(s, "lake_clu_v1", d)(Seq(base))(
+    val root = ArtifactCache.directory(s, Artifacts.cacheRoot,
+        Artifacts.lakeFixture("lake_clu_v1"), d)(Seq(base))(
       ArtifactCache.artifactHash(base)) { r =>
       (0 until 4).foreach(p =>
         LakeTable.append(base.filter(col("key") % 4 === p), r))
       LakeTable.rewriteClustered(LakeTable.read(s, r), r, "odate", 8)
-    }
+    }.dir
     LakeTable.readRange(s, root, "odate", "1996-01-01", "1996-12-31")
       .groupBy(substring(col("odate"), 1, 7).as("month"))
       .agg(count(lit(1)).as("n_orders"),

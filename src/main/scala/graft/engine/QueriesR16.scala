@@ -46,13 +46,14 @@ object QueriesR16 {
               col("o_custkey").as("custkey"),
               round(col("o_totalprice"), 2)
                 .cast(DecimalType(18, 2)).as("price"))
-    val root = LakeFixtures.cachedLazy(s, "lake_z2d_v1", d)(Seq(base))(
+    val root = ArtifactCache.directory(s, Artifacts.cacheRoot,
+        Artifacts.lakeFixture("lake_z2d_v1"), d)(Seq(base))(
       ArtifactCache.artifactHash(base)) { r =>
       (0 until 4).foreach(p =>
         LakeTable.append(base.filter(col("key") % 4 === p), r))
       LakeTable.rewriteClustered2D(LakeTable.read(s, r), r,
         "odate", "custkey", 16)
-    }
+    }.dir
     LakeTable.readRange2(s, root,
         Seq(("odate", "1994-01-01", "1995-12-31"),
             ("custkey", "1", "750")))
@@ -267,7 +268,7 @@ object QueriesR16 {
     * path is two snapshot aggregates (the v0 one stands in for the
     * PERSISTED materialized view) + the O(churn) feed + a
     * |statuses|-row merge. */
-  /** Builds (once per corpus hash — LakeFixtures) the two-version
+  /** Builds (once per corpus hash — Artifacts.lakeFixture) the two-version
     * table whose v0→v1 merge UPDATES, INSERTS, and DELETES — the
     * fixture lake_ivm_sumavg and lake_change_feed_deletes share.
     * Returns its root; versions are deterministically 0 and 1. */
@@ -279,10 +280,11 @@ object QueriesR16 {
                 .cast(DecimalType(18, 2)).as("price"))
     lazy val returned = lineitem(s, d).filter(col("l_returnflag") === "R")
       .select(col("l_orderkey")).distinct()
-    // r19: cachedLazy memoizes the resolved root per (name, data dir) —
+    // r19: the hit memo keeps the resolved root per (name, data dir) —
     // the per-call hash derivation (two analyzed-plan renders + stat
     // walks) only runs when the source tables' listings change
-    LakeFixtures.cachedLazy(s, "lake_ivmsum_v1", d)(Seq(base, returned))(
+    ArtifactCache.directory(s, Artifacts.cacheRoot,
+        Artifacts.lakeFixture("lake_ivmsum_v1"), d)(Seq(base, returned))(
       ArtifactCache.artifactHash(base).take(16) +
         ArtifactCache.artifactHash(returned).take(16)) { r =>
       LakeTable.append(base, r)
@@ -302,7 +304,7 @@ object QueriesR16 {
                   lit("N").as("status"),
                   lit(50.00).cast(DecimalType(18, 2)).as("price")))
       LakeTable.rewrite(merged, r)
-    }
+    }.dir
   }
 
   def lakeIvmSumavg(s: SparkSession, d: String): DataFrame = {
@@ -361,8 +363,8 @@ object QueriesR16 {
     // blobs are fully determined by the corpus and in production
     // arrive from storage. Logic tag probes both restart arms through
     // the SAME color encoder. Decode stays live per call.
-    ArtifactCache.materializeLazyKeyed(s, Artifacts.cacheRoot,
-      "doc_jpeg_color_blobs_v1", d)(
+    ArtifactCache.materialize(s, Artifacts.cacheRoot,
+      "doc_jpeg_color_blobs_v1", d)(Seq(documents(s, d)))(
       ArtifactCache.artifactHash(documents(s, d).select(col("doc_id"))) +
         "-L" + ArtifactCache.bytesTag(
           Jpeg.encodeColor420(16, 16, (x, y) => 2 * ((x + y) % 128),

@@ -85,8 +85,8 @@ object QueriesR17 {
     // are fully determined by the corpus; the six-scan progressive
     // encode re-ran per call. Logic tag probes both restart arms
     // through the SAME progressive encoder. Decode stays live.
-    ArtifactCache.materializeLazyKeyed(s, Artifacts.cacheRoot,
-      "doc_jpeg_prog_blobs_v1", d)(
+    ArtifactCache.materialize(s, Artifacts.cacheRoot,
+      "doc_jpeg_prog_blobs_v1", d)(Seq(documents(s, d)))(
       ArtifactCache.artifactHash(documents(s, d).select(col("doc_id"))) +
         "-L" + ArtifactCache.bytesTag(
           Jpeg.encodeGray8Progressive(16, 8,
@@ -237,9 +237,10 @@ object QueriesR17 {
     // over the explode into one build + tiny parquet scans (the
     // nearDupPairs posture). Deterministic in (corpus, n, stride,
     // cap) — all in the plan hash.
-    val kept = ArtifactCache.materializeLazy(s, Artifacts.cacheRoot,
-      s"containment_kept_n12s4df$dfCap", d)(
-      containmentKept(g, dfCap))
+    lazy val capped = containmentKept(g, dfCap)
+    val kept = ArtifactCache.materialize(s, Artifacts.cacheRoot,
+      s"containment_kept_n12s4df$dfCap", d)(Seq(capped))(
+      ArtifactCache.artifactHash(capped))(capped)
     val sz = kept.groupBy("doc_id").agg(count(lit(1)).as("sz"))
     val inter = kept.select(col("doc_id").as("id1"), col("shingle"))
       .join(kept.select(col("doc_id").as("id2"), col("shingle")),
@@ -400,12 +401,13 @@ object QueriesR17 {
     * anti-join exclusions keep frontiers from re-expanding the
     * visited set (the textbook distributed-BFS discipline). */
   def graphBfsHops(s: SparkSession, d: String): DataFrame = {
-    val edges = ArtifactCache.materializeLazy(s, Artifacts.cacheRoot,
-      "bfs_edges_v1", d)(
-      lineitem(s, d)
-        .join(orders(s, d), col("l_orderkey") === col("o_orderkey"))
-        .select(col("l_suppkey").as("sup"), col("o_custkey").as("cust"))
-        .distinct())
+    lazy val supCust = lineitem(s, d)
+      .join(orders(s, d), col("l_orderkey") === col("o_orderkey"))
+      .select(col("l_suppkey").as("sup"), col("o_custkey").as("cust"))
+      .distinct()
+    val edges = ArtifactCache.materialize(s, Artifacts.cacheRoot,
+      "bfs_edges_v1", d)(Seq(supCust))(ArtifactCache.artifactHash(supCust))(
+      supCust)
     val s0 = supplier(s, d).filter(col("s_suppkey") % 50 === 1)
       .select(col("s_suppkey").as("id")).distinct()
     val c1 = edges.join(s0, edges("sup") === s0("id"))
@@ -449,8 +451,8 @@ object QueriesR17 {
     * the LZW encode re-ran per call. Logic tag probes both interlace
     * arms through the SAME encoder. */
   private[engine] def docGifBlobs(s: SparkSession, d: String): DataFrame =
-    ArtifactCache.materializeLazyKeyed(s, Artifacts.cacheRoot,
-      "doc_gif_blobs_v1", d)(
+    ArtifactCache.materialize(s, Artifacts.cacheRoot,
+      "doc_gif_blobs_v1", d)(Seq(documents(s, d)))(
       ArtifactCache.artifactHash(
         documents(s, d).select(col("doc_id"), col("n_chars"))) + "-L" +
         ArtifactCache.bytesTag(
@@ -659,13 +661,14 @@ object QueriesR17 {
               col("o_custkey").as("custkey"),
               round(col("o_totalprice"), 2)
                 .cast(DecimalType(18, 2)).as("price"))
-    val root = LakeFixtures.cachedLazy(s, "lake_zfiles_v1", d)(Seq(base))(
+    val root = ArtifactCache.directory(s, Artifacts.cacheRoot,
+        Artifacts.lakeFixture("lake_zfiles_v1"), d)(Seq(base))(
       ArtifactCache.artifactHash(base)) { r =>
       (0 until 4).foreach(p =>
         LakeTable.append(base.filter(col("key") % 4 === p), r))
       LakeTable.rewriteClusteredN(LakeTable.read(s, r), r,
         Seq("odate", "custkey", "price"), 8, filesPerDir = 4)
-    }
+    }.dir
     LakeTable.readRangeFiles(s, root,
         Seq(("odate", "1994-01-01", "1995-12-31"),
             ("custkey", "1", "750"),

@@ -29,7 +29,8 @@ object QueriesR18 {
   def lakeLogCheckpoint(s: SparkSession, d: String): DataFrame = {
     val base = orders(s, d).select(col("o_orderkey").as("key"),
                                    col("o_orderstatus").as("status"))
-    val root = LakeFixtures.cachedLazy(s, "lake_ckpt_v1", d)(Seq(base))(
+    val root = ArtifactCache.directory(s, Artifacts.cacheRoot,
+        Artifacts.lakeFixture("lake_ckpt_v1"), d)(Seq(base))(
       ArtifactCache.artifactHash(base)) { r =>
       (0 until 12).foreach { i =>
         LakeTable.append(base.filter(col("key") % 14 === i), r)
@@ -38,7 +39,7 @@ object QueriesR18 {
       require(cv == 11L, s"fixture drifted: checkpoint at $cv, wanted 11")
       LakeTable.append(base.filter(col("key") % 14 === 12), r)
       LakeTable.append(base.filter(col("key") % 14 === 13), r)
-    }
+    }.dir
     Seq(5L, 13L)
       .map(v => LakeTable.read(s, root, Some(v))
         .groupBy("status")

@@ -337,8 +337,8 @@ object QueriesR2 {
     // which, with the fixed hyperparameters in the name, pins the
     // whole derivation.
     val e = Tables.embeddings(s, d).select("vec_id", "embedding")
-    ArtifactCache.materializeLazyKeyed(
-      s, Artifacts.cacheRoot, "ivf_recall_v1_top3_np4_c16i3", d)(
+    ArtifactCache.materialize(
+      s, Artifacts.cacheRoot, "ivf_recall_v1_top3_np4_c16i3", d)(Seq(e))(
       ArtifactCache.artifactHash(e)) {
       val ann = Artifacts.annIvfTop3(s, d)
         .select("vec_id", "neighbor_id")

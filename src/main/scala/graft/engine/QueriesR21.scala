@@ -35,14 +35,15 @@ object QueriesR21 {
   def lakeDeleteSurgical(s: SparkSession, d: String): DataFrame = {
     val base = orders(s, d).select(col("o_orderkey").as("key"),
                                    col("o_orderstatus").as("status"))
-    val root = LakeFixtures.cachedLazy(s, "lake_del_cow", d)(Seq(base))(
+    val root = ArtifactCache.directory(s, Artifacts.cacheRoot,
+        Artifacts.lakeFixture("lake_del_cow"), d)(Seq(base))(
         ArtifactCache.artifactHash(base)) { r =>
       LakeTable.append(base, r)
       LakeTable.rewriteClustered(LakeTable.read(s, r), r, "key", 8)
       LakeDml.deleteWhere(s, r,
         col("status") === "F" && col("key") < 8192,
         prunePreds = Seq(("key", "0", "8191")))
-    }
+    }.dir
     LakeTable.read(s, root).orderBy("key")
   }
 
@@ -55,7 +56,8 @@ object QueriesR21 {
     * directories. Output: the surviving snapshot. */
   def lakeDeleteBloom(s: SparkSession, d: String): DataFrame = {
     val docs = documents(s, d).select(col("doc_id"), col("lang"))
-    val root = LakeFixtures.cachedLazy(s, "lake_del_bloom", d)(Seq(docs))(
+    val root = ArtifactCache.directory(s, Artifacts.cacheRoot,
+        Artifacts.lakeFixture("lake_del_bloom"), d)(Seq(docs))(
         ArtifactCache.artifactHash(docs)) { r =>
       for (b <- 0 to 3)
         LakeDml.appendWithBloom(
@@ -67,7 +69,7 @@ object QueriesR21 {
         .collect().map(_.getLong(0)).toSeq
       if (forgotten.nonEmpty)
         LakeDml.deleteByKeys(s, r, "doc_id", forgotten)
-    }
+    }.dir
     LakeTable.read(s, root).orderBy("doc_id")
   }
 
@@ -92,12 +94,13 @@ object QueriesR21 {
                 lit("N").as("status")))
     def hash = ArtifactCache.artifactHash(base).take(16) +
       ArtifactCache.artifactHash(updates).take(16)
-    val root = LakeFixtures.cachedLazy(s, "lake_merge_cow", d)(
+    val root = ArtifactCache.directory(s, Artifacts.cacheRoot,
+        Artifacts.lakeFixture("lake_merge_cow"), d)(
       Seq(base, updates))(hash) { r =>
       LakeTable.append(base, r)
       LakeTable.rewriteClustered(LakeTable.read(s, r), r, "key", 8)
       LakeDml.mergeInto(s, r, updates, "key")
-    }
+    }.dir
     LakeTable.read(s, root).orderBy("key")
   }
 
@@ -132,7 +135,8 @@ object QueriesR21 {
     val li = lineitem(s, d)
     def hash = ArtifactCache.artifactHash(base).take(16) +
       ArtifactCache.artifactHash(li).take(16)
-    LakeFixtures.cachedLazy(s, name, d)(Seq(base, li))(hash) { r =>
+    ArtifactCache.directory(s, Artifacts.cacheRoot,
+        Artifacts.lakeFixture(name), d)(Seq(base, li))(hash) { r =>
       LakeTable.append(base, r)
       LakeTable.rewriteClustered(LakeTable.read(s, r), r, "key", 8)
       LakeDml.bloomAll(s, r, "key")
@@ -143,7 +147,7 @@ object QueriesR21 {
         li.filter(col("l_returnflag") === "R")
           .select(col("l_orderkey").as("key")).distinct())
       if (applyThem) LakeDml.applyDeletes(s, r)
-    }
+    }.dir
   }
 
   /** UPDATE WHERE over the clustered orders lake — the third DML
@@ -155,7 +159,8 @@ object QueriesR21 {
     val base = orders(s, d).select(col("o_orderkey").as("key"),
                                    col("o_orderstatus").as("status"),
                                    col("o_custkey").as("cust"))
-    val root = LakeFixtures.cachedLazy(s, "lake_upd_cow", d)(Seq(base))(
+    val root = ArtifactCache.directory(s, Artifacts.cacheRoot,
+        Artifacts.lakeFixture("lake_upd_cow"), d)(Seq(base))(
         ArtifactCache.artifactHash(base)) { r =>
       LakeTable.append(base, r)
       LakeTable.rewriteClustered(LakeTable.read(s, r), r, "key", 8)
@@ -164,7 +169,7 @@ object QueriesR21 {
         Map("status" -> lit("X"),
             "cust" -> (col("cust") + 1000000L)),
         prunePreds = Seq(("key", "0", "8191")))
-    }
+    }.dir
     LakeTable.read(s, root).orderBy("key")
   }
 
@@ -194,7 +199,8 @@ object QueriesR21 {
                 lit("N").as("status")))
     def hash = ArtifactCache.artifactHash(base).take(16) +
       ArtifactCache.artifactHash(updates).take(16)
-    val root = LakeFixtures.cachedLazy(s, "lake_cdf_dml", d)(
+    val root = ArtifactCache.directory(s, Artifacts.cacheRoot,
+        Artifacts.lakeFixture("lake_cdf_dml"), d)(
       Seq(base, updates))(hash) { r =>
       LakeTable.append(base, r)
       LakeTable.rewriteClustered(LakeTable.read(s, r), r, "key", 8)
@@ -202,7 +208,7 @@ object QueriesR21 {
       LakeDml.deleteWhere(s, r,
         col("status") === "F" && col("key") < 8192,
         prunePreds = Seq(("key", "0", "8191")))
-    }
+    }.dir
     QueriesR15.changeFeedFrame(s, root, 1L,
       LakeTable.latestVersion(s, root).get)
   }

@@ -45,11 +45,12 @@ object QueriesR22 {
     def hash = ArtifactCache.artifactHash(
       orders(s, d).select("o_orderkey", "o_orderstatus", "o_custkey"))
       .take(16) + md5(buildScript).take(16)
-    val root = LakeFixtures.cachedLazy(s, name, d)(
+    val root = ArtifactCache.directory(s, Artifacts.cacheRoot,
+        Artifacts.lakeFixture(name), d)(
       Seq(orders(s, d).select("o_orderkey", "o_orderstatus",
                               "o_custkey")))(hash) { r =>
       new LakeSql.Session(s, r).script(buildScript)
-    }
+    }.dir
     val sess = new LakeSql.Session(s, root)
     tableNames.foreach(t => sess.attach(t, s"$root/$t"))
     sess.exec(finalSql)
@@ -154,10 +155,11 @@ object QueriesR22 {
       .take(16)
     val gcols = Seq("o_orderstatus", "o_orderpriority")
     val acols = Seq("o_custkey")
-    val root = LakeFixtures.cachedLazy(s, "mv_orders", d)(Seq(base))(
+    val root = ArtifactCache.directory(s, Artifacts.cacheRoot,
+        Artifacts.lakeFixture("mv_orders"), d)(Seq(base))(
       hash) { r =>
       Mv.register(s, "orders_mv", base, gcols, acols, r)
-    }
+    }.dir
     Mv.register(s, "orders_mv", base, gcols, acols, root)
     base.groupBy("o_orderstatus")
       .agg(count(lit(1)).as("n"), sum("o_custkey").as("cust_sum"),
@@ -183,14 +185,15 @@ object QueriesR22 {
       Mv.register(s, "orders_mv_inc", LakeTable.read(s, s"$r/base"),
         gcols, acols, s"$r/mv", hllCols = acols)
     def hash = ArtifactCache.artifactHash(all).take(16)
-    val root = LakeFixtures.cachedLazy(s, "mv_orders_inc", d)(Seq(all))(
+    val root = ArtifactCache.directory(s, Artifacts.cacheRoot,
+        Artifacts.lakeFixture("mv_orders_inc"), d)(Seq(all))(
       hash) { r =>
       val delta = all.filter(col("o_orderkey") >= 20000)
       LakeTable.append(all.filter(col("o_orderkey") < 20000), s"$r/base")
       reg(r)
       LakeTable.append(delta, s"$r/base")
       Mv.refresh(s, "orders_mv_inc", LakeTable.read(s, s"$r/base"), delta)
-    }
+    }.dir
     // (re-)register against the cached tree's final paths — on a
     // build, the in-flight registration pointed at the scratch dir
     reg(root)
@@ -215,12 +218,13 @@ object QueriesR22 {
                                   col("o_custkey").as("cust"))
     val monExpr = "CAST(date_trunc('MONTH', od) AS DATE)"
     def hash = ArtifactCache.artifactHash(all).take(16)
-    val root = LakeFixtures.cachedLazy(s, "mv_orders_month", d)(Seq(all))(
+    val root = ArtifactCache.directory(s, Artifacts.cacheRoot,
+        Artifacts.lakeFixture("mv_orders_month"), d)(Seq(all))(
       hash) { r =>
       LakeTable.append(all, s"$r/base")
       Mv.register(s, "orders_mv_month", LakeTable.read(s, s"$r/base"),
         Nil, Seq("cust"), s"$r/mv", groupExprs = Seq(("mon", monExpr)))
-    }
+    }.dir
     Mv.register(s, "orders_mv_month", LakeTable.read(s, s"$root/base"),
       Nil, Seq("cust"), s"$root/mv", groupExprs = Seq(("mon", monExpr)))
     LakeTable.read(s, s"$root/base")
@@ -245,11 +249,12 @@ object QueriesR22 {
       .join(customer(s, d), col("o_custkey") === col("c_custkey"))
     def hash = ArtifactCache.artifactHash(
       joined.select("c_mktsegment", "o_orderkey")).take(16)
-    val root = LakeFixtures.cachedLazy(s, "mv_star", d)(Seq(joined))(
+    val root = ArtifactCache.directory(s, Artifacts.cacheRoot,
+        Artifacts.lakeFixture("mv_star"), d)(Seq(joined))(
       hash) { r =>
       Mv.register(s, "orders_mv_star", joined,
         Seq("c_mktsegment"), Seq("o_orderkey"), r)
-    }
+    }.dir
     Mv.register(s, "orders_mv_star", joined,
       Seq("c_mktsegment"), Seq("o_orderkey"), root)
     joined.groupBy("c_mktsegment")

@@ -48,11 +48,12 @@ object QueriesR23 {
     def hash = ArtifactCache.artifactHash(
       orders(s, d).select("o_orderkey", "o_orderstatus", "o_custkey"))
       .take(16) + md5(buildScript).take(16)
-    val root = LakeFixtures.cachedLazy(s, name, d)(
+    val root = ArtifactCache.directory(s, Artifacts.cacheRoot,
+        Artifacts.lakeFixture(name), d)(
       Seq(orders(s, d).select("o_orderkey", "o_orderstatus",
                               "o_custkey")))(hash) { r =>
       new LakeSql.Session(s, r).script(buildScript)
-    }
+    }.dir
     val sess = new LakeSql.Session(s, root)
     tableNames.foreach(t => sess.attach(t, s"$root/$t"))
     sess.exec(finalSql)
@@ -71,11 +72,12 @@ object QueriesR23 {
       .join(customer(s, d), col("o_custkey") === col("c_custkey"))
     def hash = ArtifactCache.artifactHash(
       joined.select("c_mktsegment", "o_orderkey")).take(16)
-    val root = LakeFixtures.cachedLazy(s, "mv_star", d)(Seq(joined))(
+    val root = ArtifactCache.directory(s, Artifacts.cacheRoot,
+        Artifacts.lakeFixture("mv_star"), d)(Seq(joined))(
       hash) { r =>
       Mv.register(s, "orders_mv_star", joined,
         Seq("c_mktsegment"), Seq("o_orderkey"), r)
-    }
+    }.dir
     Mv.register(s, "orders_mv_star", joined,
       Seq("c_mktsegment"), Seq("o_orderkey"), root)
     joined.filter(col("c_mktsegment").isin("BUILDING", "MACHINERY"))
@@ -95,13 +97,14 @@ object QueriesR23 {
     val all = orders(s, d).select(col("o_orderdate").as("od"),
                                   col("o_custkey").as("cust"))
     def hash = ArtifactCache.artifactHash(all).take(16)
-    val root = LakeFixtures.cachedLazy(s, "mv_orders_day", d)(Seq(all))(
+    val root = ArtifactCache.directory(s, Artifacts.cacheRoot,
+        Artifacts.lakeFixture("mv_orders_day"), d)(Seq(all))(
       hash) { r =>
       LakeTable.append(all, s"$r/base")
       Mv.register(s, "orders_mv_day", LakeTable.read(s, s"$r/base"),
         Nil, Seq("cust"), s"$r/mv",
         groupExprs = Seq(("d", "CAST(od AS DATE)")))
-    }
+    }.dir
     Mv.register(s, "orders_mv_day", LakeTable.read(s, s"$root/base"),
       Nil, Seq("cust"), s"$root/mv",
       groupExprs = Seq(("d", "CAST(od AS DATE)")))
@@ -140,11 +143,12 @@ object QueriesR23 {
     val base = orders(s, d).select("o_custkey", "o_orderkey")
     def sliced = base.filter(col("o_custkey") < 1000L)
     def hash = ArtifactCache.artifactHash(base).take(16)
-    val root = LakeFixtures.cachedLazy(s, "mv_orders_slice", d)(Seq(base))(
+    val root = ArtifactCache.directory(s, Artifacts.cacheRoot,
+        Artifacts.lakeFixture("mv_orders_slice"), d)(Seq(base))(
       hash) { r =>
       Mv.register(s, "orders_mv_slice", sliced,
         Seq("o_custkey"), Seq("o_orderkey"), r)
-    }
+    }.dir
     Mv.register(s, "orders_mv_slice", sliced,
       Seq("o_custkey"), Seq("o_orderkey"), root)
     base.filter(col("o_custkey") < 500L)
@@ -176,7 +180,8 @@ object QueriesR23 {
     def hash = ArtifactCache.artifactHash(fact).take(16) +
       ArtifactCache.artifactHash(
         customer(s, d).select("c_custkey", "c_mktsegment")).take(16)
-    val root = LakeFixtures.cachedLazy(s, "mv_star_inc", d)(
+    val root = ArtifactCache.directory(s, Artifacts.cacheRoot,
+        Artifacts.lakeFixture("mv_star_inc"), d)(
       Seq(fact, customer(s, d)))(hash) { r =>
       val delta = fact.filter(col("o_orderkey") >= 7500)
       LakeTable.append(fact.filter(col("o_orderkey") < 7500), s"$r/fact")
@@ -184,7 +189,7 @@ object QueriesR23 {
       LakeTable.append(delta, s"$r/fact")
       Mv.refresh(s, "orders_mv_star_inc", joined(r),
         delta.join(customer(s, d), col("o_custkey") === col("c_custkey")))
-    }
+    }.dir
     reg(root)
     joined(root).groupBy("c_mktsegment")
       .agg(count(lit(1)).as("n"), sum("o_orderkey").as("key_sum"),

@@ -49,11 +49,12 @@ object QueriesR24 {
       .join(nation(s, d), col("c_nationkey") === col("n_nationkey"))
     def hash = ArtifactCache.artifactHash(
       full.select("c_mktsegment", "o_orderkey")).take(16)
-    val root = LakeFixtures.cachedLazy(s, "mv_star3", d)(Seq(full))(
+    val root = ArtifactCache.directory(s, Artifacts.cacheRoot,
+        Artifacts.lakeFixture("mv_star3"), d)(Seq(full))(
       hash) { r =>
       Mv.register(s, "orders_mv_star3", full,
         Seq("c_mktsegment"), Seq("o_orderkey"), r)
-    }
+    }.dir
     Mv.register(s, "orders_mv_star3", full,
       Seq("c_mktsegment"), Seq("o_orderkey"), root)
     orders(s, d)
@@ -80,11 +81,12 @@ object QueriesR24 {
     def sliced = base.filter(
       col("o_orderdate") < expr("TIMESTAMP_NTZ '1997-01-01 00:00:00'"))
     def hash = ArtifactCache.artifactHash(base).take(16)
-    val root = LakeFixtures.cachedLazy(s, "mv_orders_castslice", d)(
+    val root = ArtifactCache.directory(s, Artifacts.cacheRoot,
+        Artifacts.lakeFixture("mv_orders_castslice"), d)(
       Seq(base))(hash) { r =>
       Mv.register(s, "orders_mv_castslice", sliced,
         Seq("o_orderdate"), Seq("o_orderkey"), r)
-    }
+    }.dir
     Mv.register(s, "orders_mv_castslice", sliced,
       Seq("o_orderdate"), Seq("o_orderkey"), root)
     base.filter(expr("CAST(o_orderdate AS DATE) <= DATE '1996-06-15'"))
@@ -104,11 +106,12 @@ object QueriesR24 {
   def mvRewriteAvgInt(s: SparkSession, d: String): DataFrame = {
     val base = orders(s, d).select("o_orderstatus", "o_orderkey")
     def hash = ArtifactCache.artifactHash(base).take(16)
-    val root = LakeFixtures.cachedLazy(s, "mv_orders_avg", d)(Seq(base))(
+    val root = ArtifactCache.directory(s, Artifacts.cacheRoot,
+        Artifacts.lakeFixture("mv_orders_avg"), d)(Seq(base))(
       hash) { r =>
       Mv.register(s, "orders_mv_avg", base,
         Seq("o_orderstatus"), Seq("o_orderkey"), r)
-    }
+    }.dir
     Mv.register(s, "orders_mv_avg", base,
       Seq("o_orderstatus"), Seq("o_orderkey"), root)
     base.groupBy(col("o_orderstatus").as("status"))
@@ -129,11 +132,12 @@ object QueriesR24 {
     val base = orders(s, d)
       .select("o_orderstatus", "o_custkey", "o_orderkey")
     def hash = ArtifactCache.artifactHash(base).take(16)
-    val root = LakeFixtures.cachedLazy(s, "mv_orders_cd", d)(Seq(base))(
+    val root = ArtifactCache.directory(s, Artifacts.cacheRoot,
+        Artifacts.lakeFixture("mv_orders_cd"), d)(Seq(base))(
       hash) { r =>
       Mv.register(s, "orders_mv_cd", base,
         Seq("o_orderstatus", "o_custkey"), Seq("o_orderkey"), r)
-    }
+    }.dir
     Mv.register(s, "orders_mv_cd", base,
       Seq("o_orderstatus", "o_custkey"), Seq("o_orderkey"), root)
     base.groupBy(col("o_orderstatus").as("status"))
@@ -159,7 +163,8 @@ object QueriesR24 {
     val base = orders(s, d).select(col("o_orderkey").as("key"),
                                    col("o_orderstatus").as("status"))
     def hash = ArtifactCache.artifactHash(base).take(16)
-    val root = LakeFixtures.cachedLazy(s, "lake_mor_keyprune", d)(
+    val root = ArtifactCache.directory(s, Artifacts.cacheRoot,
+        Artifacts.lakeFixture("lake_mor_keyprune"), d)(
       Seq(base))(hash) { r =>
       LakeTable.append(base, r)
       LakeTable.rewriteClustered(LakeTable.read(s, r), r, "key", 8)
@@ -168,7 +173,7 @@ object QueriesR24 {
       LakeDml.deleteByKeysMor(s, r, "key",
         LakeTable.read(s, r)
           .filter(col("key") >= 768L && col("key") < 1024L).select("key"))
-    }
+    }.dir
     LakeDml.readMorWhere(s, root, col("key") < 512L).orderBy("key")
   }
 }

@@ -37,11 +37,12 @@ object QueriesR25 {
     def sliced = base.filter(col("o_orderpriority").isin(
       "1-URGENT", "2-HIGH", "3-MEDIUM"))
     def hash = ArtifactCache.artifactHash(base).take(16)
-    val root = LakeFixtures.cachedLazy(s, "mv_orders_prio", d)(Seq(base))(
+    val root = ArtifactCache.directory(s, Artifacts.cacheRoot,
+        Artifacts.lakeFixture("mv_orders_prio"), d)(Seq(base))(
       hash) { r =>
       Mv.register(s, "orders_mv_prio", sliced,
         Seq("o_orderpriority", "o_orderstatus"), Seq("o_custkey"), r)
-    }
+    }.dir
     Mv.register(s, "orders_mv_prio", sliced,
       Seq("o_orderpriority", "o_orderstatus"), Seq("o_custkey"), root)
     base.filter(col("o_orderpriority") === "1-URGENT" ||
@@ -65,7 +66,8 @@ object QueriesR25 {
     val fact = orders(s, d).select("o_orderkey", "o_custkey",
                                    "o_orderstatus")
     def hash = ArtifactCache.artifactHash(fact).take(16)
-    val root = LakeFixtures.cachedLazy(s, "mv_orders_leftstar", d)(
+    val root = ArtifactCache.directory(s, Artifacts.cacheRoot,
+        Artifacts.lakeFixture("mv_orders_leftstar"), d)(
       Seq(fact))(hash) { r =>
       customer(s, d).select("c_custkey", "c_mktsegment")
         .filter(col("c_custkey") % 2 === 0)
@@ -74,7 +76,7 @@ object QueriesR25 {
       Mv.register(s, "orders_mv_leftstar",
         fact.join(dim, col("o_custkey") === col("c_custkey"), "left"),
         Seq("o_orderstatus", "c_mktsegment"), Seq("o_orderkey"), s"$r/mv")
-    }
+    }.dir
     val dim = s.read.parquet(s"$root/dim")
     def base =
       fact.join(dim, col("o_custkey") === col("c_custkey"), "left")
@@ -103,13 +105,14 @@ object QueriesR25 {
                                    "o_orderpriority")
     val dim = customer(s, d).select("c_custkey", "c_mktsegment")
     def hash = ArtifactCache.artifactHash(fact).take(16)
-    val root = LakeFixtures.cachedLazy(s, "lake_cbo_join", d)(Seq(fact))(
+    val root = ArtifactCache.directory(s, Artifacts.cacheRoot,
+        Artifacts.lakeFixture("lake_cbo_join"), d)(Seq(fact))(
       hash) { r =>
       LakeTable.append(fact, s"$r/fact")
       LakeTable.append(dim, s"$r/dim")
       LakeStats.analyze(s, s"$r/fact")
       LakeStats.analyze(s, s"$r/dim")
-    }
+    }.dir
     val saved = Seq("spark.sql.cbo.enabled",
                     "spark.sql.cbo.joinReorder.enabled")
       .map(k => k -> s.conf.getOption(k))
@@ -145,12 +148,13 @@ object QueriesR25 {
            "LPAD(CAST(o_orderkey % 100 AS STRING), 2, '0')) " +
            "AS DECIMAL(12,2))").as("v"))
     def hash = ArtifactCache.artifactHash(base).take(16)
-    val root = LakeFixtures.cachedLazy(s, "mv_orders_decavg", d)(Seq(base))(
+    val root = ArtifactCache.directory(s, Artifacts.cacheRoot,
+        Artifacts.lakeFixture("mv_orders_decavg"), d)(Seq(base))(
       hash) { r =>
       LakeTable.append(base, s"$r/base")
       Mv.register(s, "orders_mv_decavg", LakeTable.read(s, s"$r/base"),
         Seq("status"), Seq("v"), s"$r/mv")
-    }
+    }.dir
     Mv.register(s, "orders_mv_decavg", LakeTable.read(s, s"$root/base"),
       Seq("status"), Seq("v"), s"$root/mv")
     LakeTable.read(s, s"$root/base")

@@ -183,17 +183,18 @@ object QueriesR3 {
   def scanSchemaEvolution(s: SparkSession, d: String): DataFrame = {
     // r19: the two-batch fixture re-WROTE two orders projections per
     // call (0.40 s of the key) for a layout fully determined by the
-    // corpus — it joins the P6 fixture family (cachedLazy root memo);
+    // corpus — it joins the P6 lake fixture family (memoized root);
     // the mergeSchema READ under test stays live per call.
     lazy val o = orders(s, d)
-    val tmp = LakeFixtures.cachedLazy(s, "schema_evo_batches_v1", d)(
+    val tmp = ArtifactCache.directory(s, Artifacts.cacheRoot,
+        Artifacts.lakeFixture("schema_evo_batches_v1"), d)(
       Seq(o))(ArtifactCache.artifactHash(
         o.select("o_orderkey", "o_orderstatus", "o_totalprice"))) { r =>
       o.select("o_orderkey", "o_orderstatus")
         .write.mode("overwrite").parquet(s"$r/batch=1")
       o.select("o_orderkey", "o_orderstatus", "o_totalprice")
         .write.mode("overwrite").parquet(s"$r/batch=2")
-    }
+    }.dir
     // DECIMAL accumulator: this sum is ~2.5e10 over 30k doubles, where
     // round(sum_double, 4) sits in addition-order ulp noise (the
     // repo's decimal-sum rule; measured unstable across orders).

@@ -231,9 +231,10 @@ object QueriesR4 {
     // broadcasts it) + one map-side-combined aggregate. At 100 TB the
     // artifact becomes an edge table bucketed by src and the
     // per-iteration shuffle reuses its layout.
-    val edgesW = ArtifactCache.materializeLazy(s, Artifacts.cacheRoot,
-      "pagerank_edges_v1", d)(
-      edges.join(deg, "src"))
+    lazy val withDeg = edges.join(deg, "src")
+    val edgesW = ArtifactCache.materialize(s, Artifacts.cacheRoot,
+      "pagerank_edges_v1", d)(Seq(withDeg))(
+      ArtifactCache.artifactHash(withDeg))(withDeg)
     // node list re-derived from the ARTIFACT (outdeg is constant per
     // src), so the expensive base subtree is never referenced again
     val nodes = edgesW.groupBy(col("src").as("node_id"))

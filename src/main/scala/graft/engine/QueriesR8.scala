@@ -38,9 +38,10 @@ object QueriesR8 {
     // a 100 TB deployment lays the fact table out ONCE, then every
     // year-scoped query prunes against it.
     val laid = lineitem(s, d).withColumn("l_year", year(col("l_shipdate")))
-    val fact = ArtifactCache.materializeLazyKeyed(
-      s, Artifacts.cacheRoot, "dpp_lineitem_v1", d,
-      partitionBy = Seq("l_year"))(ArtifactCache.artifactHash(laid))(laid)
+    val fact = s.read.parquet(ArtifactCache.directory(
+      s, Artifacts.cacheRoot, "dpp_lineitem_v1", d)(Seq(laid))(
+      ArtifactCache.artifactHash(laid))(
+      laid.write.mode("overwrite").partitionBy("l_year").parquet(_)).dir)
     val dim = orders(s, d)
       .filter(col("o_orderdate") >= lit("2001-01-01").cast("date"))
       .groupBy(year(col("o_orderdate")).as("y"))

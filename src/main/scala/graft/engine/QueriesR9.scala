@@ -61,22 +61,27 @@ object QueriesR9 {
     val src = lineitem(s, d)
       .select(col("l_orderkey"), col("l_shipdate").cast("date").as("l_shipdate"),
               col("l_extendedprice"), col("l_discount"))
-    ArtifactCache.materializeLazyKeyed(
-      s, Artifacts.cacheRoot, "sorted_lineitem_v3", d,
-      // tiny row groups need a tiny page size too: parquet-mr only
-      // size-checks BUFFERED bytes, and the 1 MB default page plus
-      // dictionary encoding keeps a small SF's whole file under one
-      // 64 KB estimate (measured: 6000 rows → ONE row group, nothing
-      // skippable). 4 KB pages + plain encoding make the buffered
-      // estimate honest, so row groups actually close at ~64 KB.
-      writerOptions = Map(
-        "parquet.block.size" -> "65536",
-        "parquet.page.size" -> "4096",
-        "parquet.enable.dictionary" -> "false"))(
+    s.read.parquet(ArtifactCache.directory(
+      s, Artifacts.cacheRoot, "sorted_lineitem_v3", d)(Seq(src))(
       ArtifactCache.artifactHash(src))(
       src.repartitionByRange(4, col("l_shipdate"))
-        .sortWithinPartitions("l_shipdate"))
+        .sortWithinPartitions("l_shipdate")
+        .write.mode("overwrite").options(smallRowGroups).parquet(_)).dir)
   }
+
+  /** Parquet writer options for the clustered layout artifacts: 64 KB
+    * row groups. Tiny row groups need a tiny page size too: parquet-mr
+    * only size-checks BUFFERED bytes, and the 1 MB default page plus
+    * dictionary encoding keeps a small SF's whole file under one 64 KB
+    * estimate (measured: 6000 rows → ONE row group, nothing
+    * skippable). 4 KB pages + plain encoding make the buffered
+    * estimate honest, so row groups actually close at ~64 KB. The
+    * options are not part of any content hash: changing them means
+    * versioning the artifact names. */
+  private[engine] val smallRowGroups = Map(
+    "parquet.block.size" -> "65536",
+    "parquet.page.size" -> "4096",
+    "parquet.enable.dictionary" -> "false")
 
   /** Min-max row-group skipping from a sorted data layout — the
     * storage-side half of predicate pushdown: PlanSpec proves
@@ -129,14 +134,11 @@ object QueriesR9 {
         "zorder2(greatest(0L, least(4095L, " +
           "CAST(datediff(l_shipdate, DATE '1995-01-01') AS BIGINT))), " +
           "l_partkey & 4095)"))
-    ArtifactCache.materializeLazyKeyed(
-      s, Artifacts.cacheRoot, "zorder_lineitem_v1", d,
-      writerOptions = Map(
-        "parquet.block.size" -> "65536",
-        "parquet.page.size" -> "4096",
-        "parquet.enable.dictionary" -> "false"))(
+    s.read.parquet(ArtifactCache.directory(
+      s, Artifacts.cacheRoot, "zorder_lineitem_v1", d)(Seq(src))(
       ArtifactCache.artifactHash(src))(
-      src.repartitionByRange(8, col("z")).sortWithinPartitions("z"))
+      src.repartitionByRange(8, col("z")).sortWithinPartitions("z")
+        .write.mode("overwrite").options(smallRowGroups).parquet(_)).dir)
   }
 
   /** Multi-dimensional data skipping from the Z-ordered layout: a band
@@ -309,13 +311,15 @@ object QueriesR9 {
   private[engine] def bpeModel(s: SparkSession, d: String, n: Int)
       : (DataFrame, DataFrame) = {
     import s.implicits._
-    val h = ArtifactCache.artifactHash(documents(s, d).select("text"))
+    val text = documents(s, d).select("text")
+    lazy val h = ArtifactCache.artifactHash(text)
     lazy val trained = bpeTrainLoop(s, d, n)
-    val mergesDf = ArtifactCache.materializeKeyed(
-      s, Artifacts.cacheRoot, s"bpe_merges_v1_n$n", h)(
+    val mergesDf = ArtifactCache.materialize(
+      s, Artifacts.cacheRoot, s"bpe_merges_v1_n$n", d)(Seq(text))(h)(
       trained._1.toDF("step", "lhs", "rhs", "merged", "cnt"))
-    val seqsDf = ArtifactCache.materializeKeyed(
-      s, Artifacts.cacheRoot, s"bpe_seqs_v1_n$n", h)(trained._2)
+    val seqsDf = ArtifactCache.materialize(
+      s, Artifacts.cacheRoot, s"bpe_seqs_v1_n$n", d)(Seq(text))(h)(
+      trained._2)
     (mergesDf, seqsDf)
   }
 

@@ -38,7 +38,7 @@ class CacheFsSpec extends SparkTestBase {
       .select("n_nationkey", "n_name")
     val hash = "fsabstraction01"
     var computed = 0
-    val out1 = ArtifactCache.materializeKeyed(spark, root, "fsprobe", hash) {
+    val out1 = ArtifactCache.materialize(spark, root, "fsprobe", "")(Nil)(hash) {
       computed += 1; df
     }
     assert(computed == 1, "first call must compute")
@@ -49,7 +49,7 @@ class CacheFsSpec extends SparkTestBase {
     assert(new java.io.File(physical, "_SUCCESS").exists())
     // hit path: compute must NOT be evaluated; read-back serves the
     // scheme-addressed artifact
-    val out2 = ArtifactCache.materializeKeyed(spark, root, "fsprobe", hash) {
+    val out2 = ArtifactCache.materialize(spark, root, "fsprobe", "")(Nil)(hash) {
       computed += 1; df
     }
     assert(computed == 1, "second call recomputed despite a cached artifact")

@@ -2,20 +2,33 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.engine.{ArtifactCache, LakeTable, Tables}
+import org.apache.spark.sql.DataFrame
+
+import graft.engine.{ArtifactCache, Artifacts, LakeTable, Tables}
 
 /** Pins the round-19 metadata-memo optimizations: the artifact
-  * cache's fast HIT path (`materializeLazy`), the Tables schema memo,
-  * and the LakeTable merged-schema memo. The contract under test in
-  * every case: a memo NEVER survives an input change — touching a
-  * file, adding a file, or rewriting a table re-derives everything —
-  * and a memo hit returns frames whose DATA equals the slow path's.
+  * cache's hit memo, the Tables schema memo, and the LakeTable
+  * merged-schema memo. The contract under test in every case: a memo
+  * NEVER survives an input change — touching a file, adding a file, or
+  * rewriting a table re-derives everything — and a memo hit returns
+  * frames whose DATA equals the slow path's. Also pinned here: the
+  * memo's call-site key, its refusal to memoize an empty watch set,
+  * and the age sweep over lake fixture trees.
   */
 class CacheMemoSpec extends SparkTestBase {
 
   private def writeTable(dir: String, n: Int): Unit =
     spark.range(n).selectExpr("id", "id * 2 AS v")
       .coalesce(1).write.mode("overwrite").parquet(dir)
+
+  /** A plan-hashed artifact: the producing frame is its own watch set
+    * and its canonical plan is the hash. */
+  private def planHashed(root: String, name: String, in: String)(
+      produce: => DataFrame): DataFrame = {
+    lazy val df = produce
+    ArtifactCache.materialize(spark, root, name, in)(Seq(df))(
+      ArtifactCache.artifactHash(df))(df)
+  }
 
   test("materializeLazy: hit path skips the producing frame entirely") {
     val root = java.nio.file.Files
@@ -24,8 +37,7 @@ class CacheMemoSpec extends SparkTestBase {
       .createTempDirectory("graft_memo_in").toString + "/t.parquet"
     writeTable(in, 10)
     var built = 0
-    def call() = ArtifactCache.materializeLazy(
-      spark, root, "memo_probe", in) {
+    def call() = planHashed(root, "memo_probe", in) {
       built += 1
       spark.read.parquet(in).groupBy().agg(sum("v").as("sv"))
     }
@@ -43,8 +55,7 @@ class CacheMemoSpec extends SparkTestBase {
       .createTempDirectory("graft_memo_in2").toString + "/t.parquet"
     writeTable(in, 10)
     var built = 0
-    def call() = ArtifactCache.materializeLazy(
-      spark, root, "memo_probe2", in) {
+    def call() = planHashed(root, "memo_probe2", in) {
       built += 1
       spark.read.parquet(in).groupBy().agg(sum("v").as("sv"))
     }
@@ -64,8 +75,7 @@ class CacheMemoSpec extends SparkTestBase {
       .createTempDirectory("graft_memo_in3").toString + "/t.parquet"
     writeTable(in, 5)
     var built = 0
-    def call() = ArtifactCache.materializeLazy(
-      spark, root, "memo_probe3", in) {
+    def call() = planHashed(root, "memo_probe3", in) {
       built += 1
       spark.read.parquet(in).groupBy().agg(count(lit(1)).as("c"))
     }
@@ -87,8 +97,8 @@ class CacheMemoSpec extends SparkTestBase {
     var built = 0
     var hashed = 0
     var tag = "L1"
-    def call() = ArtifactCache.materializeLazyKeyed(
-      spark, root, "memo_probek", in)({ hashed += 1; s"h-$tag" }) {
+    def call() = ArtifactCache.materialize(spark, root, "memo_probek", in)(
+      Seq(spark.read.parquet(in)))({ hashed += 1; s"h-$tag" }) {
       built += 1
       spark.read.parquet(in).groupBy().agg(sum("v").as("sv"))
     }
@@ -108,19 +118,18 @@ class CacheMemoSpec extends SparkTestBase {
   }
 
   test("LakeFixtures.cachedLazy: hit skips hash+build; source rewrite re-derives") {
-    import graft.engine.LakeFixtures
     val in = java.nio.file.Files
       .createTempDirectory("graft_fix_in").toString + "/t.parquet"
     writeTable(in, 10)
     var hashed = 0
     var built = 0
     def src() = spark.read.parquet(in)
-    def call() = LakeFixtures.cachedLazy(spark, "memo_fixture_probe", in)(
-      Seq(src()))({ hashed += 1
-        graft.engine.ArtifactCache.artifactHash(src()) }) { r =>
+    def call() = ArtifactCache.directory(spark, Artifacts.cacheRoot,
+      "memo_fixture_probe", in)(Seq(src()))({ hashed += 1
+        ArtifactCache.artifactHash(src()) }) { r =>
       built += 1
       LakeTable.append(src().selectExpr("id AS k", "v"), r)
-    }
+    }.dir
     val r1 = call()
     assert(hashed == 1 && built == 1)
     assert(LakeTable.read(spark, r1).count() == 10)
@@ -134,6 +143,77 @@ class CacheMemoSpec extends SparkTestBase {
     assert(built == 2 && r2 != r1,
       "source rewrite served the stale fixture tree")
     assert(LakeTable.read(spark, r2).count() == 12)
+  }
+
+  test("call sites sharing (name, inputsKey) keep their own artifacts") {
+    // the memo key carries the call site: two sites that share a name
+    // and an inputs key but hash differently (mv_star's two fixture
+    // builders do) must each get — and keep getting — their own dir
+    val root = java.nio.file.Files
+      .createTempDirectory("graft_memo_sites").toString
+    val in = java.nio.file.Files
+      .createTempDirectory("graft_memo_sites_in").toString + "/t.parquet"
+    writeTable(in, 4)
+    def src = spark.read.parquet(in)
+    def siteA() = ArtifactCache.materialize(spark, root, "shared", in)(
+      Seq(src))("hashA")(src.selectExpr("id", "'A' AS site"))
+    def siteB() = ArtifactCache.materialize(spark, root, "shared", in)(
+      Seq(src))("hashB")(src.selectExpr("id", "'B' AS site"))
+    def sites(df: DataFrame) =
+      df.select("site").distinct().collect().map(_.getString(0)).toSeq
+    for (_ <- 1 to 2) {
+      assert(sites(siteA()) == Seq("A"), "site A served another artifact")
+      assert(sites(siteB()) == Seq("B"), "site B served site A's memo entry")
+    }
+    assert(new java.io.File(root).list().filter(_.startsWith("shared-"))
+      .sorted.toSeq == Seq("shared-hashA", "shared-hashB"))
+  }
+
+  test("an empty watch set is never memoized: the hash derives every call") {
+    val root = java.nio.file.Files
+      .createTempDirectory("graft_memo_nowatch").toString
+    var hashed = 0
+    var built = 0
+    def call() = ArtifactCache.materialize(spark, root, "nowatch", "k")(Nil)(
+      { hashed += 1; "h0" }) { built += 1; spark.range(3).toDF("id") }
+    for (_ <- 1 to 3) assert(call().count() == 3)
+    assert(hashed == 3, "an unwatched call served a memoized hash")
+    assert(built == 1, "a complete artifact was rebuilt")
+  }
+
+  test("lake fixture trees age out: a hit refreshes _SUCCESS, a later miss sweeps a stale one") {
+    val root = java.nio.file.Files
+      .createTempDirectory("graft_memo_sweep").toString
+    val in = java.nio.file.Files
+      .createTempDirectory("graft_memo_sweep_in").toString + "/t.parquet"
+    writeTable(in, 10)
+    def src() = spark.read.parquet(in)
+    def fixture() = ArtifactCache.directory(spark, root,
+      Artifacts.lakeFixture("sweep_probe"), in)(Seq(src()))(
+      ArtifactCache.artifactHash(src())) { r =>
+      LakeTable.append(src().selectExpr("id AS k", "v"), r)
+    }
+    val tree = fixture()
+    assert(tree.built)
+    val marker = new java.io.File(tree.dir, "_SUCCESS")
+    assert(marker.isFile, "a lake fixture tree must carry _SUCCESS")
+    val eightDaysAgo = System.currentTimeMillis() - 8L * 24 * 3600 * 1000
+    assert(marker.setLastModified(eightDaysAgo))
+    // hit: same tree, and the LRU clock moves to now
+    val hit = fixture()
+    assert(!hit.built && hit.dir == tree.dir)
+    assert(marker.lastModified() > eightDaysAgo + 24L * 3600 * 1000,
+      "a hit did not refresh the tree's _SUCCESS")
+    // left unused for 8 days: the next miss in the root collects it
+    assert(marker.setLastModified(eightDaysAgo))
+    ArtifactCache.directory(spark, root, "other", "")(Nil)("h1")(
+      spark.range(1).write.parquet(_))
+    assert(!new java.io.File(tree.dir).exists(),
+      "a stale lake fixture tree survived the miss path's sweep")
+    // and the memo notices the vanished tree: rebuilt, readable
+    val again = fixture()
+    assert(again.built && again.dir == tree.dir)
+    assert(LakeTable.read(spark, again.dir).count() == 10)
   }
 
   test("Tables schema memo: a rewritten table re-infers its schema") {

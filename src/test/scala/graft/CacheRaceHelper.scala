@@ -28,8 +28,8 @@ object CacheRaceHelper {
     spark.sparkContext.setLogLevel("ERROR")
     try {
       for (i <- (nKeys - 1) to 0 by -1) {
-        val df = graft.engine.ArtifactCache.materializeKeyed(
-          spark, root, s"race$i", f"racehash$i%02d")(frame(spark, i))
+        val df = graft.engine.ArtifactCache.materialize(
+          spark, root, s"race$i", "")(Nil)(f"racehash$i%02d")(frame(spark, i))
         println(s"key=race$i rows=${df.count()}")
       }
     } finally spark.stop()

@@ -40,8 +40,8 @@ class CacheRaceSpec extends SparkTestBase {
     // race from THIS JVM in forward key order while the helper runs
     // backward — the overlap lands mid-list
     val mine = (0 until nKeys).map { i =>
-      val df = graft.engine.ArtifactCache.materializeKeyed(
-        spark, root, s"race$i", f"racehash$i%02d")(
+      val df = graft.engine.ArtifactCache.materialize(
+        spark, root, s"race$i", "")(Nil)(f"racehash$i%02d")(
         CacheRaceHelper.frame(spark, i))
       i -> df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     }.toMap

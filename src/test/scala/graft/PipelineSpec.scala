@@ -11,16 +11,19 @@ class PipelineSpec extends SparkTestBase {
 
   test("artifact cache: second materialize is a hit, changed plan is a miss") {
     val root = Files.createTempDirectory("graft_cache_test").toString
+    def isCached(d: org.apache.spark.sql.DataFrame) = ArtifactCache.lookup(
+      spark, root, "q1", ArtifactCache.artifactHash(d)).isDefined
     val df = graft.engine.QueriesCore.q1PricingSummary(spark, sfDir)
-    assert(!ArtifactCache.isCached(df, root, "q1"))
-    val out1 = ArtifactCache.materialize(df, root, "q1")
-    assert(ArtifactCache.isCached(df, root, "q1"))
+    assert(!isCached(df))
+    val out1 = ArtifactCache.materialize(spark, root, "q1", "")(Nil)(
+      ArtifactCache.artifactHash(df))(df)
+    assert(isCached(df))
     // equivalent plan built fresh → same hash (canonicalization works)
     val df2 = graft.engine.QueriesCore.q1PricingSummary(spark, sfDir)
-    assert(ArtifactCache.isCached(df2, root, "q1"))
+    assert(isCached(df2))
     // different computation → different hash
     val other = graft.engine.QueriesCore.distinctExact(spark, sfDir)
-    assert(!ArtifactCache.isCached(other, root, "q1"))
+    assert(!isCached(other))
     assert(out1.count() == df.count())
   }
 
@@ -32,13 +35,13 @@ class PipelineSpec extends SparkTestBase {
     val corpse = new java.io.File(s"$root/thing-$hash")
     corpse.mkdirs()
     Files.writeString(corpse.toPath.resolve("part-junk.parquet"), "junk")
-    val got = ArtifactCache.materializeKeyed(spark, root, "thing", hash)(
+    val got = ArtifactCache.materialize(spark, root, "thing", "")(Nil)(hash)(
       Seq((1L, "a"), (2L, "b")).toDF("id", "v"))
     assert(got.count() == 2) // fresh data, not the corpse
     assert(new java.io.File(corpse, "_SUCCESS").exists())
     assert(!corpse.toPath.resolve("part-junk.parquet").toFile.exists())
     // and the cached read-back path serves the healed artifact
-    val again = ArtifactCache.materializeKeyed(spark, root, "thing", hash)(
+    val again = ArtifactCache.materialize(spark, root, "thing", "")(Nil)(hash)(
       sys.error("must not recompute on hit"))
     assert(again.count() == 2)
   }
@@ -298,5 +301,32 @@ class PipelineSpec extends SparkTestBase {
     val misses = planned.filter(_.cacheHit.contains(false)).map(_.name)
     assert(misses.isEmpty,
       s"chained cached stages report false misses in --plan: $misses")
+  }
+
+  test("a cached stage with no file inputs runs uncached and reports misses") {
+    // docs_quality_logreg trains by driver iteration over checkpointed
+    // frames: nothing in its plan names a file, so no content hash
+    // exists. The stage must still run, write its output, report
+    // cache_hit false on every run, and leave --plan working.
+    val dir = Files.createTempDirectory("graft_pipe_nofiles")
+    val root = dir.resolve("cache").toString
+    val config = dir.resolve("pipeline.json")
+    Files.writeString(config,
+      s"""{"cacheRoot": ${JsonOut.str(root)},
+         | "stages": [{"name": "quality", "query": "docs_quality_logreg",
+         |             "cache": true}]}""".stripMargin)
+    for (run <- 1 to 2) {
+      val out = dir.resolve(s"out$run").toString
+      val counts = Pipeline.runFile(spark, config.toString, sfDir, out)
+      assert(counts("quality") > 0, s"run $run wrote no rows")
+      val manifest = Files.readString(dir.resolve(s"out$run/_run.json"))
+      assert(manifest.contains(""""cache":true,"cache_hit":false"""),
+        s"run $run manifest: $manifest")
+    }
+    val planned = Pipeline.planFile(spark, config.toString, sfDir)
+    assert(planned.map(r => r.name -> r.cacheHit) ==
+      Seq("quality" -> Some(false)))
+    assert(!new java.io.File(root).exists(),
+      "an unhashable stage wrote into the cache root")
   }
 }

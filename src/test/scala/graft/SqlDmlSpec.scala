@@ -443,4 +443,35 @@ class SqlDmlSpec extends SparkTestBase {
     assert(e.getMessage.contains("already exists"))
     graft.engine.Mv.clear()
   }
+
+  private def lakeOf(ks: Seq[Long]): String = {
+    val root = Files.createTempDirectory("graft_lakesql_view").toString
+    LakeTable.append(ks.toDF("k"), root)
+    root
+  }
+
+  private def keys(s: LakeSql.Session): Seq[Long] =
+    s.exec("SELECT k FROM t ORDER BY k").as[Long].collect().toSeq
+
+  test("attach re-pointing a name at a same-version root re-registers its view") {
+    // both roots sit at version 0: a view cache keyed on the name and
+    // version alone would keep serving the first root
+    val (a, b) = (lakeOf(Seq(1L, 2L)), lakeOf(Seq(7L)))
+    val s = sess().attach("t", a)
+    assert(keys(s) == Seq(1L, 2L))
+    s.attach("t", b)
+    assert(keys(s) == Seq(7L), "attach kept serving the old root's view")
+  }
+
+  test("two sessions on one SparkSession never read each other's views") {
+    val (a, b) = (lakeOf(Seq(1L, 2L)), lakeOf(Seq(7L)))
+    val s1 = sess().attach("t", a)
+    val s2 = sess().attach("t", b)
+    assert(keys(s1) == Seq(1L, 2L))
+    assert(keys(s2) == Seq(7L))
+    // s2 replaced the shared temp view "t"; s1's table is unchanged,
+    // so only the catalog check can see that its view is gone
+    assert(keys(s1) == Seq(1L, 2L), "session read another session's view")
+    assert(keys(s2) == Seq(7L))
+  }
 }
