@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main. Round-13 shape, fixing the two round-12 verdict
   * findings about the bench RECORD (VERDICT r12 "Next round" #1/#3):
@@ -12,7 +11,9 @@ import org.apache.spark.sql.SparkSession
   *     session aggregates, and a pointer to the full artifact. The
   *     full per-key map — median plus [min, median, max] spread for
   *     every key — is written as one parseable JSON file
-  *     (SPARK_GRAFT_BENCH_OUT, default `BENCH_full.json` in cwd).
+  *     (SPARK_GRAFT_BENCH_OUT, default `BENCH_full_c<cpus>_<sf>.json`
+  *     in cwd). Both records echo `cpus`, so a record names the core
+  *     count that produced it.
   *
   *  2. Single timed runs made box noise indistinguishable from
   *     regressions (r12 burned judge time proving two 5 s spikes were
@@ -38,17 +39,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SessionHygiene.configure(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // pinned like Verify/tests: keys evaluate date functions (and
-      // scan_dpp_partitioned PERSISTS year(l_shipdate) into a shared
-      // artifact whose hash doesn't see the timezone) — an unpinned
-      // local zone would poison that artifact for the UTC sessions
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SessionHygiene.session(cpus)
     // A handful of keys deliberately run an UNPARTITIONED window over
     // a domain-bounded frame (≤|types|³ path trigrams, exact-rank
     // frames — every one audited in PlanGateSpec's allowlist). Spark
@@ -194,8 +185,9 @@ object Bench {
       .map { case (k, m) => s"${jstr(k)}:${jstr(m)}" }.mkString("{", ",", "}")
     // total sums SUCCESSFUL keys' medians only; n_errors > 0 is the red flag
     val total = results.collect { case (_, (_, med, _)) if med >= 0 => med }.sum
+    val cpusJson = cpus.toIntOption.fold(jstr(cpus))(_.toString)
     val fullJson =
-      s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$fullQs,"spread":$fullSpread,"sf":${jstr(sfDir)},"repeats":$repeats,"n_keys":${results.size},"n_errors":${errors.size},"errors":$errJson}"""
+      s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$fullQs,"spread":$fullSpread,"sf":${jstr(sfDir)},"cpus":$cpusJson,"repeats":$repeats,"n_keys":${results.size},"n_errors":${errors.size},"errors":$errJson}"""
     // The full artifact must never take the stdout line down with it:
     // an unwritable target falls back to the JVM temp dir (no
     // environment-specific absolute paths baked into the binary —
@@ -218,7 +210,7 @@ object Bench {
     val gatedQs = gatedPresent
       .map(k => jstr(k) + ":" + r3(byName(k)._2)).mkString("{", ",", "}")
     val gatedTotal = gatedPresent.map(byName(_)._2).filter(_ >= 0).sum
-    println(s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$gatedQs,"gated_total":${r3(gatedTotal)},"sf":${jstr(sfDir)},"repeats":$repeats,"n_keys":${results.size},"n_errors":${errors.size},"full":${jstr(written.getOrElse("UNWRITTEN"))}}""")
+    println(s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$gatedQs,"gated_total":${r3(gatedTotal)},"sf":${jstr(sfDir)},"cpus":$cpusJson,"repeats":$repeats,"n_keys":${results.size},"n_errors":${errors.size},"full":${jstr(written.getOrElse("UNWRITTEN"))}}""")
     if (errors.nonEmpty)
       System.err.println(s"[bench] ${errors.size}/${results.size} keys FAILED: " +
         errors.reverse.map(_._1).mkString(", "))

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.engine.{ArtifactCache, Artifacts, Mv, Tables}
@@ -25,14 +24,7 @@ object BenchMv {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
       "/root/testdata/sf0.1")
-    val spark = SessionHygiene.configure(SparkSession.builder())
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .appName("graft-bench-mv")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SessionHygiene.session("32")
 
     val base = Tables.lineitem(spark, sfDir)
     def query() = base.groupBy("l_returnflag", "l_linestatus")

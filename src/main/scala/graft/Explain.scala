@@ -72,13 +72,7 @@ object Explain {
     require(args.length >= 2, "usage: Explain <sfDir> <outDir> [key ...]")
     val (sfDir, outDir) = (args(0), args(1))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SessionHygiene.configure(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SessionHygiene.session(cpus)
     val (written, failed) = run(spark, sfDir, outDir, args.drop(2).toSet)
     println(s"""{"explained": $written, "failed": $failed,""" +
       s""" "out": ${JsonOut.str(outDir)}}""")

@@ -10,8 +10,7 @@ import graft.engine.PipelineConfig
   * re-expressed over the registry + ArtifactCache). `graft.Stream` is
   * the streaming twin; this is the batch-DAG one.
   *
-  * Usage: runMain graft.Pipeline [--plan] [--parallel]
-  *        <config.json> [sfDir] [outDir]
+  * Usage: runMain graft.Pipeline [--plan] <config.json> [sfDir] [outDir]
   *   reads  the JSON stage DAG from <config.json>
   *   runs   each stage in declaration order (query keys against
   *          <sfDir>; SQL stages over earlier stages' temp views;
@@ -22,8 +21,6 @@ import graft.engine.PipelineConfig
   *   --plan: DRY RUN — prints the stage DAG (wave levels) with
   *          cache-hit status (content-hash probe, no data read) and
   *          writes nothing
-  *   --parallel: executes the DAG wave by wave, each wave's stages
-  *          concurrently (identical results, lower wall time)
   *
   * An example config lives at tools/example_pipeline.json.
   */
@@ -38,11 +35,9 @@ object Pipeline {
     * cache-hit status, rows, wall ms — the pipetree run report);
     * returns stage row counts. Callable from tests and from main. */
   def runFile(spark: SparkSession, configPath: String, sfDir: String,
-              outDir: String, parallel: Boolean = false): Map[String, Long] = {
-    val pipeline = PipelineConfig.parse(readConfig(configPath))
-    val report =
-      if (parallel) PipelineConfig.runReportParallel(spark, sfDir, pipeline)
-      else PipelineConfig.runReport(spark, sfDir, pipeline)
+              outDir: String): Map[String, Long] = {
+    val report = PipelineConfig.runReport(spark, sfDir,
+      PipelineConfig.parse(readConfig(configPath)))
     val entries = report.map { r =>
       val t0 = System.nanoTime()
       r.df.write.mode("overwrite").parquet(s"$outDir/${r.name}")
@@ -69,32 +64,22 @@ object Pipeline {
 
   def main(args: Array[String]): Unit = {
     val flags = args.takeWhile(_.startsWith("--")).toSet
-    // unknown flags fail loudly: a typo'd --paralel silently running
-    // the whole pipeline sequentially (or a typo'd --plan WRITING
-    // everything it was asked to dry-run) is the opposite of intent
-    val unknownFlags = flags -- Set("--plan", "--parallel")
+    val usage =
+      "usage: runMain graft.Pipeline [--plan] <config.json> [sfDir] [outDir]"
+    // unknown flags fail loudly: a typo'd --plan WRITING everything
+    // it was asked to dry-run is the opposite of intent
+    val unknownFlags = flags - "--plan"
     require(unknownFlags.isEmpty,
-      s"unknown flag(s) ${unknownFlags.mkString(", ")}; " +
-        "usage: runMain graft.Pipeline [--plan] [--parallel] " +
-        "<config.json> [sfDir] [outDir]")
+      s"unknown flag(s) ${unknownFlags.mkString(", ")}; $usage")
     val dryRun = flags("--plan")
-    val parallel = flags("--parallel")
     val rest = args.dropWhile(_.startsWith("--"))
-    require(rest.nonEmpty,
-      "usage: runMain graft.Pipeline [--plan] [--parallel] " +
-        "<config.json> [sfDir] [outDir]")
+    require(rest.nonEmpty, usage)
     val configPath = rest(0)
     val sfDir = rest.lift(1).getOrElse("/root/testdata/sf0.001")
     val outDir = rest.lift(2).getOrElse(
       java.nio.file.Files.createTempDirectory("graft_pipeline_out").toString)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SessionHygiene.session(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
     if (dryRun) {
       val js = planFile(spark, configPath, sfDir).map { r =>
         val hit = r.cacheHit.map(h => s""","cache_hit":$h""").getOrElse("")
@@ -103,7 +88,7 @@ object Pipeline {
       }.mkString("[", ",", "]")
       println(s"""{"pipeline_plan":$js}""")
     } else {
-      val counts = runFile(spark, configPath, sfDir, outDir, parallel)
+      val counts = runFile(spark, configPath, sfDir, outDir)
       val js = counts.toSeq.sortBy(_._1)
         .map { case (k, v) => s"${JsonOut.str(k)}:$v" }.mkString("{", ",", "}")
       println(s"""{"pipeline_stages":$js,"out":${JsonOut.str(outDir)}}""")

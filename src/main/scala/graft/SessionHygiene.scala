@@ -2,22 +2,35 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Long-single-JVM session hygiene, single-sourced for the harness
-  * mains (Bench and Verify both run the full 150+-key registry in one
+/** The mains' session builder and long-single-JVM session hygiene
+  * (Bench and Verify both run the full 150+-key registry in one
   * process). Measured in the round-5 2×2 A/B at sf0.1: ON tames the
   * late-session artifact-key outliers (graph_pagerank 5.6→1.3 s) and
   * lowers full-session totals ~14%, at ≤0.2 s cost on a handful of
   * small keys right after a GC tick (BASELINE.md round-5 section). */
 object SessionHygiene {
 
-  /** Status-store caps, applied at session build: even with the UI
-    * off, per-execution status data accumulates across a 150-key
-    * session — bookkeeping rent the late keys otherwise pay. */
-  def configure(b: SparkSession.Builder): SparkSession.Builder = b
-    .config("spark.sql.ui.retainedExecutions", "20")
-    .config("spark.ui.retainedJobs", "100")
-    .config("spark.ui.retainedStages", "100")
-    .config("spark.ui.retainedTasks", "1000")
+  /** The one session every main builds: `local[cpus]` with as many
+    * shuffle partitions, the session time zone pinned to UTC (keys
+    * evaluate date functions, and some persist their results into
+    * shared artifacts whose hash does not see the time zone), the UI
+    * off, and WARN logging. The status-store caps matter even with
+    * the UI off: per-execution status data accumulates across a
+    * 150-key session — bookkeeping rent the late keys otherwise pay. */
+  def session(cpus: String): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .config("spark.sql.ui.retainedExecutions", "20")
+      .config("spark.ui.retainedJobs", "100")
+      .config("spark.ui.retainedStages", "100")
+      .config("spark.ui.retainedTasks", "1000")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
 
   /** A/B gate: SPARK_GRAFT_BENCH_HYGIENE=0 disables the inter-key
     * step (reproduces the round-5 measurement). */

@@ -102,14 +102,8 @@ object Sql {
 
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: Sql <sfDir> <query>")
-    val spark = SessionHygiene.configure(SparkSession.builder())
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark =
+      SessionHygiene.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
     run(spark, args(0), args(1)).show(100, truncate = false)
     spark.stop()
   }

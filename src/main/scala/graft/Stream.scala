@@ -1822,13 +1822,7 @@ object Stream {
     val outDir = args.lift(1).getOrElse(
       java.nio.file.Files.createTempDirectory("graft_stream_out").toString)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SessionHygiene.session(cpus)
     val counts = runAll(spark, sfDir, outDir)
     val js = counts.toSeq.sortBy(_._1)
       .map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")

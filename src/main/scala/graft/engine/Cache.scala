@@ -435,9 +435,10 @@ object Artifacts {
     * every later invocation replays the commit log only. The suffix is
     * LakeTable's log-format version, bumped whenever the LOG FORMAT or
     * layout semantics change (r11 ADVICE #3: content hashes cannot see
-    * the producing code) — fmt3 tags temporal stat kinds, so trees
-    * built under an older format would serve stale stats. */
-  def lakeFixture(name: String): String = s"$name-fmt3"
+    * the producing code) — fmt4 records every writer's stats in the
+    * kind-aware colStats form (older trees carry only the retired
+    * single-column stats map, which no reader prunes with). */
+  def lakeFixture(name: String): String = s"$name-fmt4"
 
   /** The verified near-dup pair list (id1, id2, jaccard) for the
     * documents table — the shared upstream of docs_dedup_near /

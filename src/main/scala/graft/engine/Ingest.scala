@@ -110,7 +110,7 @@ object Ingest {
             // CLUSTERED compaction: the table re-lands range-
             // partitioned on its probe key with per-directory
             // [min, max] stats in the commit log — so a stats-pruned
-            // read (LakeTable.readRange2) opens only the directories
+            // read (LakeTable.readRange) opens only the directories
             // whose range intersects the probe, the serving-side IO
             // contract (knnProbe's pruneByStats path).
             case Some(colName) =>
@@ -674,7 +674,7 @@ object Ingest {
     * `pruneByStats` turns the corpus scan into the SERVING-layout
     * read: the probed cell set (≤ codebook size — one bounded
     * METADATA collect, never vector data) drives per-cell
-    * [[LakeTable.readRange2]] reads, so only the data directories
+    * [[LakeTable.readRange]] reads, so only the data directories
     * whose logged cell_id range intersects a probed cell are opened
     * — probe IO ∝ probed cells once maintenance has clustered the
     * table (directories without stats are read conservatively, so
@@ -721,7 +721,7 @@ object Ingest {
           .filter(col("cell_id").isNotNull).distinct()
           .collect().map(_.getLong(0)).toSeq.sorted
         if (probed.isEmpty) emptyFrame(spark, vecsSchema)
-        else probed.map(c => LakeTable.readRange2(spark, vecsRoot(root),
+        else probed.map(c => LakeTable.readRange(spark, vecsRoot(root),
             Seq(("cell_id", c.toString, c.toString)), asOf)
             .select("vec_id", "embedding", "cell_id"))
           .reduce(_ unionByName _)

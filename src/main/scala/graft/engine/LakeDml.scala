@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions._
   *
   *   1. PRUNE — select candidate directories from the commit log
   *      alone: per-column [min, max] stats for range-shaped
-  *      predicates ([[LakeTable.rangeDirs2]]'s machinery), plus the
+  *      predicates ([[LakeTable.rangeDirs]]'s machinery), plus the
   *      per-directory BLOOM sidecars this module adds for
   *      key-membership shapes (a uniform id column spans the whole
   *      [min, max] in EVERY directory, so range stats prune nothing
@@ -180,7 +180,7 @@ object LakeDml {
     * where the predicate CAN match and the log prunes the rest
     * (hints are an optimization: a directory the hints exclude is
     * excluded from the scan entirely, so hints must be implied by
-    * `cond`, the same contract as [[LakeTable.readRange2]]).
+    * `cond`, the same contract as [[LakeTable.readRange]]).
     * `candidateFilter` is the bloom hook [[deleteByKeys]] installs.
     */
   // ------------------------------------------------------------------
@@ -755,8 +755,7 @@ object LakeDml {
     val insertDir =
       if (nInserts == 0) None
       else {
-        val dir = f"data-v$next%010d-" +
-          java.util.UUID.randomUUID().toString.take(8) + "-ins"
+        val dir = LakeTable.newDataDir(next, "-ins")
         inserts.write.mode("errorifexists").parquet(s"$root/$dir")
         Some(dir)
       }
@@ -1002,8 +1001,7 @@ object LakeDml {
     val f = fs(spark, root)
     try {
       LakeTable.writeCommit(spark, root,
-        LakeTable.Commit(next, adds, dirty, txn, Map.empty, colStats,
-          kinds, fileStats, Seq.empty,
+        LakeTable.Commit(next, adds, dirty, txn, colStats, kinds, fileStats,
           eqdelRemoves = st.eqdels.map(_._1)))
     } catch {
       case e: LakeTable.CommitConflictException =>
@@ -1055,8 +1053,7 @@ object LakeDml {
     def rewriteOne(d: String): DirResult = {
       val src = spark.read.parquet(s"$root/$d")
       val survivors = transform(src)
-      val newDir = f"data-v$next%010d-" +
-        java.util.UUID.randomUUID().toString.take(8) + "-cow"
+      val newDir = LakeTable.newDataDir(next, "-cow")
       survivors.write.mode("errorifexists").parquet(s"$root/$newDir")
       val written = spark.read.parquet(s"$root/$newDir")
       // ONE read-back aggregate per directory carries everything the
@@ -1172,8 +1169,8 @@ object LakeDml {
     val f = fs(spark, root)
     try {
       LakeTable.writeCommit(spark, root,
-        LakeTable.Commit(next, adds, removes, txn,
-          Map.empty, colStats, kinds, fileStats))
+        LakeTable.Commit(next, adds, removes, txn, colStats, kinds,
+          fileStats))
     } catch {
       case e: LakeTable.CommitConflictException =>
         adds.foreach { d =>

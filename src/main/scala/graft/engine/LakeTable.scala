@@ -2,7 +2,8 @@ package graft.engine
 
 import scala.jdk.CollectionConverters._
 
-import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.node.ObjectNode
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -97,11 +98,10 @@ object LakeTable {
   private[graft] case class LogState(
       version: Long,
       active: Seq[String],
-      stats: Map[String, (String, String)],
-      colStats: Map[String, Map[String, (String, String)]],
-      colKinds: Map[String, String],
-      fileStats: Map[String, Seq[(String, Map[String, (String, String)])]],
-      txns: Map[String, Long],
+      colStats: Map[String, ColBounds] = Map.empty,
+      colKinds: Map[String, String] = Map.empty,
+      fileStats: Map[String, Seq[(String, ColBounds)]] = Map.empty,
+      txns: Map[String, Long] = Map.empty,
       eqdels: Seq[(String, String)] = Seq.empty,
       // tombstone-file key ranges: eqdel dir → (min, max, stat kind)
       // over its key column — lets a MOR read with a key predicate
@@ -122,10 +122,9 @@ object LakeTable {
       // just raw cardinality. Written by [[LakeStats.analyze]]
       // (stats-only commits), absent otherwise.
       colMeta: Map[String, Map[String, (String, Long)]] = Map.empty)
+      extends DirMaps
 
-  private[graft] val emptyState =
-    LogState(-1L, Seq.empty, Map.empty, Map.empty, Map.empty, Map.empty,
-             Map.empty)
+  private[graft] val emptyState = LogState(-1L, Seq.empty)
 
   private def foldCommit(st: LogState, c: Commit): LogState = {
     val act = scala.collection.mutable.LinkedHashSet[String](st.active: _*)
@@ -144,7 +143,6 @@ object LakeTable {
     // reader consults (readers filter on `active` throughout), and
     // eqdelStats was already pruned this way via eqdelRemoves
     LogState(c.version, act.toSeq,
-      (st.stats -- c.removes) ++ c.stats,
       (st.colStats -- c.removes) ++ c.colStats,
       st.colKinds ++ c.colKinds,
       (st.fileStats -- c.removes) ++ c.fileStats,
@@ -179,70 +177,150 @@ object LakeTable {
       .sorted
   }
 
-  private def readCheckpoint(spark: SparkSession, root: String,
-                             version: Long): LogState = {
-    logFilesRead.incrementAndGet()
-    val f = fs(spark, root)
-    val in = f.open(checkpointPath(root, version))
-    val bytes = try in.readAllBytes() finally in.close()
-    val node =
-      try {
-        val n = mapper.readTree(bytes)
-        require(n != null && n.has("version") && n.has("active"),
-          "checkpoint record missing version/active")
-        n
-      } catch {
-        case e: Exception =>
-          throw new IllegalArgumentException(
-            s"lake: corrupt checkpoint ${checkpointPath(root, version)} " +
-              s"(${e.getMessage})", e)
-      }
-    def strMap(k: String): Map[String, String] =
-      Option(node.get(k)).map(_.properties().asScala
-        .map(e => e.getKey -> e.getValue.asText()).toMap).getOrElse(Map.empty)
-    def boundsOf(n: com.fasterxml.jackson.databind.JsonNode) =
-      (n.get("min").asText(), n.get("max").asText())
-    val stats = Option(node.get("stats")).map(_.properties().asScala
-      .map(e => e.getKey -> boundsOf(e.getValue)).toMap).getOrElse(Map.empty)
-    val colStats = Option(node.get("colstats")).map(_.properties().asScala
-      .map { e =>
-        e.getKey -> e.getValue.properties().asScala
-          .map(c => c.getKey -> boundsOf(c.getValue)).toMap
-      }.toMap).getOrElse(Map.empty[String, Map[String, (String, String)]])
-    val fileStats = Option(node.get("filestats")).map(_.properties().asScala
-      .map { e =>
-        e.getKey -> e.getValue.elements().asScala.map { fn =>
-          (fn.get("f").asText(),
-           fn.get("cols").properties().asScala
-             .map(c => c.getKey -> boundsOf(c.getValue)).toMap)
-        }.toSeq
-      }.toMap)
-      .getOrElse(Map.empty[String, Seq[(String, Map[String, (String, String)])]])
-    val txns = Option(node.get("txns")).map(_.properties().asScala
-      .map(e => e.getKey -> e.getValue.asLong()).toMap).getOrElse(Map.empty)
-    val eqdels = Option(node.get("eqdels")).map(_.elements().asScala
+  /** Per-column [min, max] bounds, as recorded in the log. */
+  private[graft] type ColBounds = Map[String, (String, String)]
+
+  /** The per-directory maps both log files carry: a commit records
+    * them for what it adds, a checkpoint for the folded state. Their
+    * JSON spelling lives in one place, [[writeMaps]] / [[readMaps]],
+    * so commits and checkpoints cannot drift apart. */
+  private[graft] trait DirMaps {
+    def colStats: Map[String, ColBounds]
+    def colKinds: Map[String, String]
+    def fileStats: Map[String, Seq[(String, ColBounds)]]
+    def eqdelStats: Map[String, (String, String, String)]
+    def rowCounts: Map[String, Long]
+    def colMeta: Map[String, Map[String, (String, Long)]]
+  }
+
+  private case class Maps(
+      colStats: Map[String, ColBounds],
+      colKinds: Map[String, String],
+      fileStats: Map[String, Seq[(String, ColBounds)]],
+      eqdelStats: Map[String, (String, String, String)],
+      rowCounts: Map[String, Long],
+      colMeta: Map[String, Map[String, (String, Long)]]) extends DirMaps
+
+  private def props(n: JsonNode): Iterator[(String, JsonNode)] =
+    n.properties().asScala.iterator.map(e => e.getKey -> e.getValue)
+
+  /** The object field `k` of `node` as a map (empty when absent). */
+  private def objField[V](node: JsonNode, k: String)(
+      v: JsonNode => V): Map[String, V] =
+    Option(node.get(k)).map(props(_).map { case (key, n) => key -> v(n) }
+      .toMap).getOrElse(Map.empty)
+
+  private def strs(node: JsonNode, k: String): Seq[String] =
+    Option(node.get(k)).map(_.elements().asScala.map(_.asText()).toSeq)
+      .getOrElse(Seq.empty)
+
+  private def readBounds(n: JsonNode): (String, String) =
+    (n.get("min").asText(), n.get("max").asText())
+
+  private def readColBounds(n: JsonNode): ColBounds =
+    props(n).map { case (c, b) => c -> readBounds(b) }.toMap
+
+  private def readEqdels(node: JsonNode, k: String): Seq[(String, String)] =
+    Option(node.get(k)).map(_.elements().asScala
       .map(e => (e.get("d").asText(), e.get("k").asText())).toSeq)
       .getOrElse(Seq.empty)
-    val eqdelStats = Option(node.get("eqstats")).map(_.properties().asScala
-      .map { e =>
-        e.getKey -> (e.getValue.get("min").asText(),
-                     e.getValue.get("max").asText(),
-                     e.getValue.get("kd").asText())
-      }.toMap).getOrElse(Map.empty[String, (String, String, String)])
-    val rowCounts = Option(node.get("rowcounts")).map(_.properties().asScala
-      .map(e => e.getKey -> e.getValue.asLong()).toMap)
-      .getOrElse(Map.empty[String, Long])
-    val colMeta = Option(node.get("colmeta")).map(_.properties().asScala
-      .map { e =>
-        e.getKey -> e.getValue.properties().asScala.map { c =>
-          c.getKey -> (c.getValue.get("ndv").asText(),
-                       c.getValue.get("nulls").asLong())
-        }.toMap
-      }.toMap).getOrElse(Map.empty[String, Map[String, (String, Long)]])
-    LogState(node.get("version").asLong(),
-      node.get("active").elements().asScala.map(_.asText()).toSeq,
-      stats, colStats, strMap("colkinds"), fileStats, txns, eqdels,
-      eqdelStats, rowCounts, colMeta)
+
+  private def readMaps(node: JsonNode): Maps = Maps(
+    objField(node, "colstats")(readColBounds),
+    objField(node, "colkinds")(_.asText()),
+    objField(node, "filestats")(_.elements().asScala.map(f =>
+      (f.get("f").asText(), readColBounds(f.get("cols")))).toSeq),
+    objField(node, "eqstats") { e =>
+      val (mn, mx) = readBounds(e)
+      (mn, mx, e.get("kd").asText())
+    },
+    objField(node, "rowcounts")(_.asLong()),
+    objField(node, "colmeta")(props(_).map { case (c, m) =>
+      c -> (m.get("ndv").asText(), m.get("nulls").asLong())
+    }.toMap))
+
+  /** Writes `m` as the object field `k` of `json`, one `put` per
+    * entry; an empty map writes nothing. */
+  private def putObj[V](json: ObjectNode, k: String, m: Map[String, V])(
+      put: (ObjectNode, String, V) => Unit): Unit =
+    if (m.nonEmpty) {
+      val o = json.putObject(k)
+      m.foreach { case (key, v) => put(o, key, v) }
+    }
+
+  private def putBounds(o: ObjectNode, k: String,
+                        b: (String, String)): ObjectNode = {
+    val n = o.putObject(k)
+    n.put("min", b._1)
+    n.put("max", b._2)
+  }
+
+  private def putColBounds(o: ObjectNode, k: String, cols: ColBounds): Unit =
+    putObj(o, k, cols)(putBounds(_, _, _))
+
+  private def putEqdels(json: ObjectNode, k: String,
+                        eqdels: Seq[(String, String)]): Unit =
+    if (eqdels.nonEmpty) {
+      val a = json.putArray(k)
+      eqdels.foreach { case (d, key) =>
+        val o = a.addObject(); o.put("d", d); o.put("k", key)
+      }
+    }
+
+  private def writeMaps(json: ObjectNode, m: DirMaps): Unit = {
+    putObj(json, "colstats", m.colStats)(putColBounds)
+    putObj(json, "colkinds", m.colKinds)((o, c, kind) => o.put(c, kind))
+    putObj(json, "filestats", m.fileStats) { (o, d, files) =>
+      val a = o.putArray(d)
+      files.foreach { case (f, cols) =>
+        val fo = a.addObject()
+        fo.put("f", f)
+        putColBounds(fo, "cols", cols)
+      }
+    }
+    putObj(json, "eqstats", m.eqdelStats) { case (o, d, (mn, mx, kd)) =>
+      putBounds(o, d, (mn, mx)).put("kd", kd)
+    }
+    putObj(json, "rowcounts", m.rowCounts)((o, d, n) => o.put(d, n))
+    putObj(json, "colmeta", m.colMeta) { (o, d, cols) =>
+      putObj(o, d, cols) { case (dn, c, (ndv, nulls)) =>
+        val b = dn.putObject(c)
+        b.put("ndv", ndv); b.put("nulls", nulls)
+      }
+    }
+  }
+
+  /** Reads one log file and parses it as JSON; a torn or corrupted
+    * file is a table-integrity event, so it fails with the table's
+    * own message (and the path), not a bare Jackson parse error
+    * three frames deep. `required` are the fields a record must have. */
+  private def readLogFile(spark: SparkSession, path: Path, what: String,
+                          required: String*): JsonNode = {
+    logFilesRead.incrementAndGet()
+    val in = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .open(path)
+    val bytes = try in.readAllBytes() finally in.close()
+    try {
+      val n = mapper.readTree(bytes)
+      require(n != null && required.forall(n.has),
+        s"$what record missing ${required.mkString("/")}")
+      n
+    } catch {
+      case e: Exception =>
+        throw new IllegalArgumentException(
+          s"lake: corrupt $what $path (${e.getMessage})", e)
+    }
+  }
+
+  private def readCheckpoint(spark: SparkSession, root: String,
+                             version: Long): LogState = {
+    val node = readLogFile(spark, checkpointPath(root, version),
+      "checkpoint", "version", "active")
+    val m = readMaps(node)
+    LogState(node.get("version").asLong(), strs(node, "active"),
+      m.colStats, m.colKinds, m.fileStats,
+      objField(node, "txns")(_.asLong()), readEqdels(node, "eqdels"),
+      m.eqdelStats, m.rowCounts, m.colMeta)
   }
 
   private def writeCheckpoint(spark: SparkSession, root: String,
@@ -251,70 +329,9 @@ object LakeTable {
     json.put("version", st.version)
     val act = json.putArray("active")
     st.active.foreach(act.add)
-    if (st.stats.nonEmpty) {
-      val o = json.putObject("stats")
-      st.stats.foreach { case (d, (mn, mx)) =>
-        val b = o.putObject(d); b.put("min", mn); b.put("max", mx)
-      }
-    }
-    if (st.colStats.nonEmpty) {
-      val o = json.putObject("colstats")
-      st.colStats.foreach { case (d, cols) =>
-        val dn = o.putObject(d)
-        cols.foreach { case (c, (mn, mx)) =>
-          val b = dn.putObject(c); b.put("min", mn); b.put("max", mx)
-        }
-      }
-    }
-    if (st.colKinds.nonEmpty) {
-      val o = json.putObject("colkinds")
-      st.colKinds.foreach { case (c, k) => o.put(c, k) }
-    }
-    if (st.fileStats.nonEmpty) {
-      val o = json.putObject("filestats")
-      st.fileStats.foreach { case (d, files) =>
-        val a = o.putArray(d)
-        files.foreach { case (fn, cols) =>
-          val fo = a.addObject()
-          fo.put("f", fn)
-          val cs = fo.putObject("cols")
-          cols.foreach { case (c, (mn, mx)) =>
-            val b = cs.putObject(c); b.put("min", mn); b.put("max", mx)
-          }
-        }
-      }
-    }
-    if (st.txns.nonEmpty) {
-      val o = json.putObject("txns")
-      st.txns.foreach { case (app, b) => o.put(app, b) }
-    }
-    if (st.eqdels.nonEmpty) {
-      val a = json.putArray("eqdels")
-      st.eqdels.foreach { case (d, k) =>
-        val o = a.addObject(); o.put("d", d); o.put("k", k)
-      }
-    }
-    if (st.eqdelStats.nonEmpty) {
-      val o = json.putObject("eqstats")
-      st.eqdelStats.foreach { case (d, (mn, mx, kd)) =>
-        val b = o.putObject(d)
-        b.put("min", mn); b.put("max", mx); b.put("kd", kd)
-      }
-    }
-    if (st.rowCounts.nonEmpty) {
-      val o = json.putObject("rowcounts")
-      st.rowCounts.foreach { case (d, n) => o.put(d, n) }
-    }
-    if (st.colMeta.nonEmpty) {
-      val o = json.putObject("colmeta")
-      st.colMeta.foreach { case (d, cols) =>
-        val dn = o.putObject(d)
-        cols.foreach { case (c, (ndv, nulls)) =>
-          val b = dn.putObject(c)
-          b.put("ndv", ndv); b.put("nulls", nulls)
-        }
-      }
-    }
+    putObj(json, "txns", st.txns)((o, app, b) => o.put(app, b))
+    putEqdels(json, "eqdels", st.eqdels)
+    writeMaps(json, st)
     val f = fs(spark, root)
     val lp = checkpointPath(root, st.version)
     // last-writer-wins is fine here: any two checkpoints of the same
@@ -458,19 +475,18 @@ object LakeTable {
     * an optional (appId, batchId) idempotence token — the
     * exactly-once handshake for streaming writers (the Delta
     * `txn`-action pattern): a re-delivered microbatch finds its
-    * batchId already in the log and becomes a no-op. `stats` is the
-    * legacy single-column [min, max] per directory; `colStats` is
-    * the multi-column generalization (dir → column → [min, max])
-    * that 2-D clustering writes so a two-predicate range read can
-    * prune on both dimensions. */
+    * batchId already in the log and becomes a no-op. `colStats` is
+    * the per-directory [min, max] of each stat'd column (dir →
+    * column → bounds), compared under `colKinds`' declared ordering,
+    * so a multi-predicate range read prunes on every dimension. Logs
+    * written before `colStats` existed carried a single-column
+    * `stats` map; it is no longer read, so such directories are
+    * un-stat'd and always survive pruning. */
   case class Commit(version: Long, adds: Seq[String], removes: Seq[String],
                     txn: Option[(String, Long)] = None,
-                    stats: Map[String, (String, String)] = Map.empty,
-                    colStats: Map[String, Map[String, (String, String)]] =
-                      Map.empty,
+                    colStats: Map[String, ColBounds] = Map.empty,
                     colKinds: Map[String, String] = Map.empty,
-                    fileStats: Map[String,
-                      Seq[(String, Map[String, (String, String)])]] =
+                    fileStats: Map[String, Seq[(String, ColBounds)]] =
                       Map.empty,
                     eqdelAdds: Seq[(String, String)] = Seq.empty,
                     eqdelRemoves: Seq[String] = Seq.empty,
@@ -478,7 +494,7 @@ object LakeTable {
                       Map.empty,
                     rowCounts: Map[String, Long] = Map.empty,
                     colMeta: Map[String, Map[String, (String, Long)]] =
-                      Map.empty)
+                      Map.empty) extends DirMaps
 
   /** Stat-ordering tag for a column: "num" when the recorded min/max
     * were computed under NUMERIC ordering, "ts" for DATE/TIMESTAMP
@@ -506,85 +522,15 @@ object LakeTable {
 
   private def readCommit(spark: SparkSession, root: String,
                          version: Long): Commit = {
-    logFilesRead.incrementAndGet()
-    val f = fs(spark, root)
-    val in = f.open(logPath(root, version))
-    val bytes =
-      try in.readAllBytes()
-      finally in.close()
-    // a torn or corrupted log file is a table-integrity event: fail
-    // with the table's own message (and the path), not a bare
-    // Jackson parse error three frames deep
-    val node =
-      try {
-        val n = mapper.readTree(bytes)
-        require(n != null && n.has("version"),
-          "commit record has no version field")
-        n
-      } catch {
-        case e: Exception =>
-          throw new IllegalArgumentException(
-            s"lake: corrupt commit log ${logPath(root, version)} " +
-              s"(${e.getMessage})", e)
-      }
-    def arr(k: String): Seq[String] =
-      Option(node.get(k)).map(_.elements().asScala.map(_.asText()).toSeq)
-        .getOrElse(Seq.empty)
-    val txn = Option(node.get("txnApp")).map(a =>
-      (a.asText(), node.get("txnBatch").asLong()))
-    val stats = Option(node.get("stats")).map { s =>
-      s.properties().asScala.map { e =>
-        e.getKey -> (e.getValue.get("min").asText(),
-                     e.getValue.get("max").asText())
-      }.toMap
-    }.getOrElse(Map.empty[String, (String, String)])
-    val colStats = Option(node.get("colstats")).map { s =>
-      s.properties().asScala.map { e =>
-        e.getKey -> e.getValue.properties().asScala.map { c =>
-          c.getKey -> (c.getValue.get("min").asText(),
-                       c.getValue.get("max").asText())
-        }.toMap
-      }.toMap
-    }.getOrElse(Map.empty[String, Map[String, (String, String)]])
-    val colKinds = Option(node.get("colkinds")).map { s =>
-      s.properties().asScala.map(e => e.getKey -> e.getValue.asText()).toMap
-    }.getOrElse(Map.empty[String, String])
-    val fileStats = Option(node.get("filestats")).map { s =>
-      s.properties().asScala.map { e =>
-        e.getKey -> e.getValue.elements().asScala.map { f =>
-          (f.get("f").asText(),
-           f.get("cols").properties().asScala.map { c =>
-             c.getKey -> (c.getValue.get("min").asText(),
-                          c.getValue.get("max").asText())
-           }.toMap)
-        }.toSeq
-      }.toMap
-    }.getOrElse(
-      Map.empty[String, Seq[(String, Map[String, (String, String)])]])
-    val eqAdds = Option(node.get("eqadd")).map(_.elements().asScala
-      .map(e => (e.get("d").asText(), e.get("k").asText())).toSeq)
-      .getOrElse(Seq.empty)
-    val eqRemoves = Option(node.get("eqremove"))
-      .map(_.elements().asScala.map(_.asText()).toSeq).getOrElse(Seq.empty)
-    val eqStats = Option(node.get("eqstats")).map(_.properties().asScala
-      .map { e =>
-        e.getKey -> (e.getValue.get("min").asText(),
-                     e.getValue.get("max").asText(),
-                     e.getValue.get("kd").asText())
-      }.toMap).getOrElse(Map.empty[String, (String, String, String)])
-    val rowCounts = Option(node.get("rowcounts")).map(_.properties().asScala
-      .map(e => e.getKey -> e.getValue.asLong()).toMap)
-      .getOrElse(Map.empty[String, Long])
-    val colMeta = Option(node.get("colmeta")).map(_.properties().asScala
-      .map { e =>
-        e.getKey -> e.getValue.properties().asScala.map { c =>
-          c.getKey -> (c.getValue.get("ndv").asText(),
-                       c.getValue.get("nulls").asLong())
-        }.toMap
-      }.toMap).getOrElse(Map.empty[String, Map[String, (String, Long)]])
-    Commit(node.get("version").asLong(), arr("add"), arr("remove"), txn,
-           stats, colStats, colKinds, fileStats, eqAdds, eqRemoves,
-           eqStats, rowCounts, colMeta)
+    val node = readLogFile(spark, logPath(root, version), "commit log",
+      "version")
+    val m = readMaps(node)
+    Commit(node.get("version").asLong(), strs(node, "add"),
+      strs(node, "remove"),
+      Option(node.get("txnApp")).map(a =>
+        (a.asText(), node.get("txnBatch").asLong())),
+      m.colStats, m.colKinds, m.fileStats, readEqdels(node, "eqadd"),
+      strs(node, "eqremove"), m.eqdelStats, m.rowCounts, m.colMeta)
   }
 
   /** Sum of parquet-footer row counts for each added directory — one
@@ -641,76 +587,12 @@ object LakeTable {
       json.put("txnApp", app)
       json.put("txnBatch", batch)
     }
-    if (commit.stats.nonEmpty) {
-      val st = json.putObject("stats")
-      commit.stats.foreach { case (dir, (mn, mx)) =>
-        val o = st.putObject(dir)
-        o.put("min", mn)
-        o.put("max", mx)
-      }
-    }
-    if (commit.colStats.nonEmpty) {
-      val st = json.putObject("colstats")
-      commit.colStats.foreach { case (dir, cols) =>
-        val d = st.putObject(dir)
-        cols.foreach { case (c, (mn, mx)) =>
-          val o = d.putObject(c)
-          o.put("min", mn)
-          o.put("max", mx)
-        }
-      }
-    }
-    if (commit.colKinds.nonEmpty) {
-      val ck = json.putObject("colkinds")
-      commit.colKinds.foreach { case (c, k) => ck.put(c, k) }
-    }
-    if (commit.fileStats.nonEmpty) {
-      val fsNode = json.putObject("filestats")
-      commit.fileStats.foreach { case (dir, files) =>
-        val a = fsNode.putArray(dir)
-        files.foreach { case (f, cols) =>
-          val o = a.addObject()
-          o.put("f", f)
-          val cs = o.putObject("cols")
-          cols.foreach { case (c, (mn, mx)) =>
-            val co = cs.putObject(c)
-            co.put("min", mn)
-            co.put("max", mx)
-          }
-        }
-      }
-    }
-    if (commit.eqdelAdds.nonEmpty) {
-      val a = json.putArray("eqadd")
-      commit.eqdelAdds.foreach { case (d, k) =>
-        val o = a.addObject(); o.put("d", d); o.put("k", k)
-      }
-    }
+    putEqdels(json, "eqadd", commit.eqdelAdds)
     if (commit.eqdelRemoves.nonEmpty) {
       val a = json.putArray("eqremove")
       commit.eqdelRemoves.foreach(a.add)
     }
-    if (commit.eqdelStats.nonEmpty) {
-      val o = json.putObject("eqstats")
-      commit.eqdelStats.foreach { case (d, (mn, mx, kd)) =>
-        val b = o.putObject(d)
-        b.put("min", mn); b.put("max", mx); b.put("kd", kd)
-      }
-    }
-    if (commit.rowCounts.nonEmpty) {
-      val o = json.putObject("rowcounts")
-      commit.rowCounts.foreach { case (d, n) => o.put(d, n) }
-    }
-    if (commit.colMeta.nonEmpty) {
-      val o = json.putObject("colmeta")
-      commit.colMeta.foreach { case (d, cols) =>
-        val dn = o.putObject(d)
-        cols.foreach { case (c, (ndv, nulls)) =>
-          val b = dn.putObject(c)
-          b.put("ndv", ndv); b.put("nulls", nulls)
-        }
-      }
-    }
+    writeMaps(json, commit)
     val bytes = mapper.writeValueAsBytes(json)
     val lp = logPath(root, commit.version)
     if (f.getScheme == "file") {
@@ -828,12 +710,23 @@ object LakeTable {
     spark.read.schema(schema).parquet(paths: _*)
   }
 
+  /** A fresh data-directory name for a commit at `version`. The
+    * version in the name is only an identifier (the log, not the
+    * name, carries the version); the UUID prefix keeps concurrent
+    * writers apart, and `suffix` tags the writer (LakeDml's "-ins"
+    * and "-cow"). */
+  private[graft] def newDataDir(version: Long, suffix: String = ""): String =
+    f"data-v$version%010d-${java.util.UUID.randomUUID().toString.take(8)}$suffix"
+
+  private def nextVersion(spark: SparkSession, root: String): Long =
+    latestVersion(spark, root).getOrElse(-1L) + 1
+
   /** Append `df` as the next version: write an immutable data
     * directory, then commit its add. Returns the committed version. */
   def append(df: DataFrame, root: String): Long = {
     val spark = df.sparkSession
-    val next = latestVersion(spark, root).getOrElse(-1L) + 1
-    val dir = f"data-v$next%010d-${java.util.UUID.randomUUID().toString.take(8)}"
+    val next = nextVersion(spark, root)
+    val dir = newDataDir(next)
     df.write.mode("errorifexists").parquet(s"$root/$dir")
     writeCommit(spark, root, Commit(next, Seq(dir), Seq.empty))
     next
@@ -842,34 +735,90 @@ object LakeTable {
   /** Append with per-directory min/max statistics on `statsCol` —
     * the DATA-SKIPPING half of the lakehouse read path (Delta's
     * per-file stats / Iceberg's manifest ranges): the bounds live in
-    * the commit log, so a range read prunes directories from the log
-    * alone, never opening a parquet footer it will not scan. Stats
-    * are stored as STRINGS and compared lexicographically — dates
-    * and zero-padded numerics qualify; anything else should not be a
-    * skipping column. */
+    * the commit log with the column's stat kind, so a range read
+    * prunes directories from the log alone, never opening a parquet
+    * footer it will not scan. */
   def appendWithStats(df: DataFrame, root: String,
                       statsCol: String): Long = {
-    import org.apache.spark.sql.functions.{col, max, min}
     val spark = df.sparkSession
-    val next = latestVersion(spark, root).getOrElse(-1L) + 1
-    val dir = f"data-v$next%010d-${java.util.UUID.randomUUID().toString.take(8)}"
+    val next = nextVersion(spark, root)
+    val dir = newDataDir(next)
     df.write.mode("errorifexists").parquet(s"$root/$dir")
-    val bounds = spark.read.parquet(s"$root/$dir")
-      .agg(min(col(statsCol)).cast("string"),
-           max(col(statsCol)).cast("string")).head()
-    writeCommit(spark, root, Commit(next, Seq(dir), Seq.empty, None,
-      Map(dir -> (bounds.getString(0), bounds.getString(1)))))
+    val l = landed(spark, root, dir, None, df.schema, Seq(statsCol))
+    writeCommit(spark, root, Commit(next, l.leaves, Seq.empty,
+      colStats = l.colStats, colKinds = l.kinds))
     next
   }
 
-  /** The active directories whose recorded [min, max] on `statsCol`
-    * intersects [lo, hi] — directories WITHOUT stats always survive
-    * (stats are an optimization, never a correctness filter). */
-  def rangeDirs(spark: SparkSession, root: String, lo: String, hi: String,
-                asOf: Option[Long] = None): Seq[String] = {
-    val st = replayState(spark, root, asOf)
-    st.active.filter(d =>
-      st.stats.get(d).forall { case (mn, mx) => mx >= lo && mn <= hi })
+  /** What one stat'd write landed under `base`: its leaf directories
+    * (`base` itself, or its `partCol=` children), each leaf's
+    * [min, max] on every column in `cols`, the same bounds per FILE,
+    * and each column's stat kind. */
+  private case class Landed(leaves: Seq[String],
+                            colStats: Map[String, ColBounds],
+                            fileStats: Map[String, Seq[(String, ColBounds)]],
+                            kinds: Map[String, String])
+
+  /** The one stats pass every stat'd writer shares: ONE grouped
+    * aggregate over input_file_name measures each file, and a leaf's
+    * bounds fold from its files under the column's kind — what one
+    * aggregate over the leaf would record, with no second data pass.
+    * A column that is all-null in a file (or a whole leaf) records no
+    * bounds there, so that file (leaf) always survives pruning on
+    * it; so does a leaf whose "num" bounds do not parse (NaN). */
+  private def landed(spark: SparkSession, root: String, base: String,
+                     partCol: Option[String],
+                     schema: org.apache.spark.sql.types.StructType,
+                     cols: Seq[String]): Landed = {
+    import org.apache.spark.sql.functions.{col, input_file_name, max, min}
+    val leaves = partCol match {
+      case None => Seq(base)
+      case Some(p) =>
+        // range or value partitioning may leave some leaves unwritten
+        fs(spark, root).listStatus(new Path(root, base)).toSeq
+          .map(_.getPath.getName).filter(_.startsWith(s"$p=")).sorted
+          .map(n => s"$base/$n")
+    }
+    val kinds = cols.map(c => c -> statKind(schema(c).dataType)).toMap
+    val aggs = cols.flatMap(c => Seq(min(col(c)).cast("string"),
+                                     max(col(c)).cast("string")))
+    val perFile = spark.read.parquet(s"$root/$base")
+      .groupBy(input_file_name().as("__f"))
+      .agg(aggs.head, aggs.tail: _*)
+      .collect().toSeq.map { r =>
+        // ".../<base>[/<leaf>]/part-....parquet" → (leaf, file); the
+        // file URI is percent-encoded, the leaf names listed are not
+        val path = new java.net.URI(r.getString(0)).getPath
+        val idx = path.indexOf(base)
+        require(idx >= 0, s"lake: stats file $path outside $base")
+        val rel = path.substring(idx)
+        val cut = rel.lastIndexOf('/')
+        val bounds = cols.zipWithIndex.flatMap { case (c, i) =>
+          for (mn <- Option(r.getString(1 + 2 * i));
+               mx <- Option(r.getString(2 + 2 * i))) yield c -> (mn, mx)
+        }.toMap
+        (rel.substring(0, cut), rel.substring(cut + 1), bounds)
+      }
+    def extreme(c: String, xs: Seq[String], lowest: Boolean): Option[String] =
+      if (kinds(c) != "num") Some(if (lowest) xs.min else xs.max)
+      else if (xs.forall(toNum(_).isDefined)) {
+        val ord = Ordering.by[String, BigDecimal](BigDecimal(_))
+        Some(if (lowest) xs.min(ord) else xs.max(ord))
+      } else None
+    val byLeaf = perFile.groupBy(_._1).filter(e => leaves.contains(e._1))
+    val colStats = byLeaf.map { case (leaf, files) =>
+      leaf -> cols.flatMap { c =>
+        val bs = files.flatMap(_._3.get(c))
+        if (bs.isEmpty) None
+        else for (mn <- extreme(c, bs.map(_._1), lowest = true);
+                  mx <- extreme(c, bs.map(_._2), lowest = false))
+          yield c -> (mn, mx)
+      }.toMap
+    }.filter(_._2.nonEmpty)
+    val fileStats = byLeaf.map { case (leaf, files) =>
+      leaf -> files.sortBy(_._2).map(f => (f._2, f._3))
+    }
+    Landed(leaves, colStats, fileStats, kinds)
   }
 
   /** Does the predicate range [lo, hi] intersect recorded stats
@@ -921,17 +870,18 @@ object LakeTable {
     try Some(BigDecimal(s)) catch { case _: NumberFormatException => None }
 
   /** The active directories whose recorded per-COLUMN [min, max]
-    * intersects EVERY requested (col, lo, hi) predicate — the
-    * multi-dimension pruning a Z-ordered layout exists for.
-    * Directories without stats on a requested column always survive
-    * (stats are an optimization, never a correctness filter). */
-  def rangeDirs2(spark: SparkSession, root: String,
-                 preds: Seq[(String, String, String)],
-                 asOf: Option[Long] = None): Seq[String] =
+    * intersects EVERY requested (col, lo, hi) predicate under the
+    * column's stat kind — the multi-dimension pruning a Z-ordered
+    * layout exists for. Directories without stats on a requested
+    * column always survive (stats are an optimization, never a
+    * correctness filter). */
+  def rangeDirs(spark: SparkSession, root: String,
+                preds: Seq[(String, String, String)],
+                asOf: Option[Long] = None): Seq[String] =
     dirsMatching(replayState(spark, root, asOf), preds)
 
   /** The one spelling of directory-grain stat pruning, shared by
-    * [[rangeDirs2]] and [[rangeFiles]] so a future fix to
+    * [[rangeDirs]], [[rangeFiles]] and LakeDml so a future fix to
     * [[statIntersects]] handling cannot be applied to one site only. */
   private[graft] def dirsMatching(st: LogState,
       preds: Seq[(String, String, String)]): Seq[String] =
@@ -953,10 +903,13 @@ object LakeTable {
     * prunes 60+/64 for a tight 3-D box). */
   def rangeFiles(spark: SparkSession, root: String,
                  preds: Seq[(String, String, String)],
-                 asOf: Option[Long] = None): (Seq[String], Seq[String]) = {
-    val st = replayState(spark, root, asOf)
-    val dirs = dirsMatching(st, preds)
-    val (withFiles, whole) = dirs.partition(st.fileStats.contains)
+                 asOf: Option[Long] = None): (Seq[String], Seq[String]) =
+    filesMatching(replayState(spark, root, asOf), preds)
+
+  private def filesMatching(st: LogState,
+      preds: Seq[(String, String, String)]): (Seq[String], Seq[String]) = {
+    val (withFiles, whole) = dirsMatching(st, preds)
+      .partition(st.fileStats.contains)
     val files = withFiles.flatMap { d =>
       st.fileStats(d).collect {
         case (f, cols) if preds.forall { case (c, lo, hi) =>
@@ -992,46 +945,21 @@ object LakeTable {
     }
   }
 
-  /** Multi-predicate range read through the log's per-column stats:
-    * scans only the directories every predicate's range intersects,
-    * then applies all row-level predicates on top — skipping changes
+  /** Range read through the log's stats: scans only what
+    * [[rangeFiles]] keeps (whole directories without per-file stats,
+    * the surviving files of those with them), then applies every
+    * row-level predicate under its column's kind — skipping changes
     * WHAT IS SCANNED, never what is returned. */
-  def readRange2(spark: SparkSession, root: String,
-                 preds: Seq[(String, String, String)],
-                 asOf: Option[Long] = None): DataFrame = {
-    val dirs = rangeDirs2(spark, root, preds, asOf)
-    if (dirs.isEmpty) return read(spark, root, asOf).limit(0)
-    rowRangeFilter(spark.read.parquet(dirs.map(d => s"$root/$d"): _*),
-      replayState(spark, root, asOf).colKinds, preds)
-  }
-
-  /** FILE-grain range read: like readRange2 but scanning only the
-    * surviving files inside per-file-stat'd directories (whole
-    * directories without file stats still scan in full) — same
-    * results, strictly less I/O. */
-  def readRangeFiles(spark: SparkSession, root: String,
-                     preds: Seq[(String, String, String)],
-                     asOf: Option[Long] = None): DataFrame = {
-    val (whole, files) = rangeFiles(spark, root, preds, asOf)
-    val paths = whole.map(d => s"$root/$d") ++ files.map(f => s"$root/$f")
-    if (paths.isEmpty) return read(spark, root, asOf).limit(0)
-    rowRangeFilter(spark.read.parquet(paths: _*),
-      replayState(spark, root, asOf).colKinds, preds)
-  }
-
-  /** Range read through the log's stats: scans only the directories
-    * `rangeDirs` keeps and applies the row-level predicate on top —
-    * skipping changes WHAT IS SCANNED, never what is returned. */
-  def readRange(spark: SparkSession, root: String, statsCol: String,
-                lo: String, hi: String,
+  def readRange(spark: SparkSession, root: String,
+                preds: Seq[(String, String, String)],
                 asOf: Option[Long] = None): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    val dirs = rangeDirs(spark, root, lo, hi, asOf)
-    // every directory skipped: a legitimately empty result — keep the
+    val st = replayState(spark, root, asOf)
+    val (whole, files) = filesMatching(st, preds)
+    val paths = (whole ++ files).map(p => s"$root/$p")
+    // everything skipped: a legitimately empty result — keep the
     // table schema (limit(0) never scans data) instead of failing
-    if (dirs.isEmpty) return read(spark, root, asOf).limit(0)
-    spark.read.parquet(dirs.map(d => s"$root/$d"): _*)
-      .filter(col(statsCol).cast("string").between(lo, hi))
+    if (paths.isEmpty) return read(spark, root, asOf).limit(0)
+    rowRangeFilter(spark.read.parquet(paths: _*), st.colKinds, preds)
   }
 
   /** Incremental consumption — the reader half of the streaming
@@ -1115,13 +1043,12 @@ object LakeTable {
         dropOrphan()
         return None
       }
-      val next = latestVersion(spark, root).getOrElse(-1L) + 1
+      val next = nextVersion(spark, root)
       val adds =
         if (df.isEmpty) Seq.empty
         else {
           if (dataDir.isEmpty) {
-            val dir = f"data-v$next%010d-" +
-              java.util.UUID.randomUUID().toString.take(8)
+            val dir = newDataDir(next)
             df.write.mode("errorifexists").parquet(s"$root/$dir")
             dataDir = Some(dir)
           }
@@ -1153,8 +1080,8 @@ object LakeTable {
     val spark = df.sparkSession
     if (lastTxn(spark, root, appId).exists(_ >= batchId)) return None
     val prev = activeDirs(spark, root)
-    val next = latestVersion(spark, root).getOrElse(-1L) + 1
-    val dir = f"data-v$next%010d-${java.util.UUID.randomUUID().toString.take(8)}"
+    val next = nextVersion(spark, root)
+    val dir = newDataDir(next)
     df.write.mode("errorifexists").parquet(s"$root/$dir")
     try {
       writeCommit(spark, root,
@@ -1175,8 +1102,8 @@ object LakeTable {
   def rewrite(df: DataFrame, root: String): Long = {
     val spark = df.sparkSession
     val prev = activeDirs(spark, root)
-    val next = latestVersion(spark, root).getOrElse(-1L) + 1
-    val dir = f"data-v$next%010d-${java.util.UUID.randomUUID().toString.take(8)}"
+    val next = nextVersion(spark, root)
+    val dir = newDataDir(next)
     df.write.mode("errorifexists").parquet(s"$root/$dir")
     writeCommit(spark, root, Commit(next, Seq(dir), prev))
     next
@@ -1191,29 +1118,14 @@ object LakeTable {
     * metadata (parquet partitionBy) and is not stored in the rows. */
   def appendPartitioned(df: DataFrame, root: String, partCol: String,
                         statsCol: String): Long = {
-    import org.apache.spark.sql.functions.{col, max, min}
     val spark = df.sparkSession
-    val next = latestVersion(spark, root).getOrElse(-1L) + 1
-    val base = f"data-v$next%010d-${java.util.UUID.randomUUID().toString.take(8)}"
+    val next = nextVersion(spark, root)
+    val base = newDataDir(next)
     df.write.mode("errorifexists").partitionBy(partCol)
       .parquet(s"$root/$base")
-    val f = fs(spark, root)
-    val leaves = f.listStatus(new Path(root, base)).toSeq
-      .map(_.getPath.getName)
-      .filter(_.startsWith(s"$partCol="))
-      .sorted
-      .map(n => s"$base/$n")
-    val statRows = spark.read.parquet(s"$root/$base")
-      .groupBy(partCol)
-      .agg(min(col(statsCol)).cast("string").as("mn"),
-           max(col(statsCol)).cast("string").as("mx"))
-      .collect()
-      .map(r => s"$base/$partCol=${r.get(0)}" ->
-        (r.getString(1), r.getString(2)))
-      .toMap
-    writeCommit(spark, root,
-      Commit(next, leaves, Seq.empty, None,
-             leaves.flatMap(d => statRows.get(d).map(d -> _)).toMap))
+    val l = landed(spark, root, base, Some(partCol), df.schema, Seq(statsCol))
+    writeCommit(spark, root, Commit(next, l.leaves, Seq.empty,
+      colStats = l.colStats, colKinds = l.kinds))
     next
   }
 
@@ -1221,102 +1133,62 @@ object LakeTable {
     * commit (the OPTIMIZE ZORDER shape, one dimension): the table
     * content range-partitions on `clusterCol` into `buckets`
     * contiguous slices, each slice lands as its own data directory,
-    * and every directory's [min, max] goes into the commit log — so
-    * a table whose appends carried no stats (arrival order scatters
-    * every column) becomes range-prunable in one transaction.
-    * Readers replaying the log see the old layout or the new one,
-    * never a mix. The range exchange is the only shuffle; no global
-    * sort. */
+    * and every directory's [min, max] and the column's stat kind go
+    * into the commit log — so a table whose appends carried no
+    * stats (arrival order scatters every column) becomes
+    * range-prunable in one transaction. Readers replaying the log
+    * see the old layout or the new one, never a mix. The range
+    * exchange is the only shuffle; no global sort. */
   def rewriteClustered(df: DataFrame, root: String, clusterCol: String,
                        buckets: Int): Long = {
-    import org.apache.spark.sql.functions.{col, max, min, spark_partition_id}
+    import org.apache.spark.sql.functions.{col, spark_partition_id}
     val spark = df.sparkSession
     val prev = activeDirs(spark, root)
-    val next = latestVersion(spark, root).getOrElse(-1L) + 1
-    val base = f"data-v$next%010d-${java.util.UUID.randomUUID().toString.take(8)}"
+    val next = nextVersion(spark, root)
+    val base = newDataDir(next)
     df.repartitionByRange(buckets, col(clusterCol))
       .withColumn("__bucket", spark_partition_id())
       .write.mode("errorifexists").partitionBy("__bucket")
       .parquet(s"$root/$base")
-    // enumerate the bucket leaves actually written (range partitioning
-    // may leave some buckets empty) and stat each from one grouped agg
-    val f = fs(spark, root)
-    val leaves = f.listStatus(new Path(root, base)).toSeq
-      .map(_.getPath.getName)
-      .filter(_.startsWith("__bucket="))
-      .sorted
-      .map(n => s"$base/$n")
-    val statRows = spark.read.parquet(s"$root/$base")
-      .groupBy("__bucket")
-      .agg(min(col(clusterCol)).cast("string").as("mn"),
-           max(col(clusterCol)).cast("string").as("mx"))
-      .collect()
-      .map(r => s"$base/__bucket=${r.get(0)}" ->
-        (r.getString(1), r.getString(2)))
-      .toMap
-    val dirStats = leaves.flatMap(d => statRows.get(d).map(d -> _)).toMap
-    // Record the SAME bounds in the kind-aware colStats/colKinds form
-    // too (the rewriteClusteredN posture), so readRange2/readRangeFiles
-    // can prune with the column's declared ordering — the legacy
-    // single-column `stats` map serves readRange's lexicographic
-    // contract only, which silently keeps-or-skips wrong for unpadded
-    // numeric strings (min="0", max="15" vs lo="7").
-    writeCommit(spark, root,
-      Commit(next, leaves, prev, None, dirStats,
-             colStats = dirStats.map { case (d, mm) =>
-               d -> Map(clusterCol -> mm) },
-             colKinds = Map(clusterCol ->
-               statKind(df.schema(clusterCol).dataType))))
+    val l = landed(spark, root, base, Some("__bucket"), df.schema,
+      Seq(clusterCol))
+    writeCommit(spark, root, Commit(next, l.leaves, prev,
+      colStats = l.colStats, colKinds = l.kinds))
     next
   }
 
-  /** 2-D clustered rewrite — the Z-ORDER core (r10 verdict #5): the
-    * table content is laid out on the bit-interleaved Morton code of
-    * its two cluster columns (each scaled to 16 bits by min/max
-    * normalization — the public Delta OPTIMIZE ZORDER recipe), range-
-    * partitioned into `buckets` contiguous z-slices, each slice
-    * landing as its own data directory with per-directory [min, max]
-    * recorded for BOTH columns in the commit log. Because the Morton
-    * curve alternates bits, every z-contiguous slice is a small
-    * rectangle-ish region of the (A, B) plane — so a range predicate
-    * on EITHER column (or both) prunes directories, which no 1-D sort
-    * can offer. One atomic commit; readers see the old layout or the
-    * new, never a mix.
+  /** K-column clustered rewrite with PER-FILE statistics (r11 verdict
+    * #5) — the Z-ORDER core: the table content is laid out on the
+    * k-way Morton interleave of the cluster columns (each scaled to
+    * ⌊62/k⌋ ≤ 16 bits by min/max normalization — the public Delta
+    * OPTIMIZE ZORDER recipe), range-partitioned into buckets ×
+    * filesPerDir contiguous z-slices; every `filesPerDir` consecutive
+    * slices land as the files of one data directory. Because the
+    * Morton curve alternates bits, every z-contiguous slice is a
+    * small box of the cluster space, so a range predicate on ANY
+    * cluster column prunes, which no 1-D sort can offer. The commit
+    * log records [min, max] on EVERY cluster column at BOTH grains —
+    * per directory (the coarse prune) and per FILE (where the real
+    * 100 TB I/O win lives: a k-D box prunes most files even inside a
+    * surviving directory) — plus each column's stat-ordering kind,
+    * so readers never apply numeric ordering to lexicographic stats.
     *
     * Column ordinals: numeric columns cast directly; string/date
     * columns map through their days-since-epoch ordinal. The scaling
-    * min/max is one 1-row aggregate (a driver-side constant, the
-    * appendPartitioned stats posture). The range exchange on the
-    * z-value is the only shuffle; no global sort. */
-  def rewriteClustered2D(df: DataFrame, root: String, colA: String,
-                         colB: String, buckets: Int): Long =
-    rewriteClusteredN(df, root, Seq(colA, colB), buckets)
-
-  /** K-column clustered rewrite with PER-FILE statistics (r11 verdict
-    * #5 — the generalization of the 2-D path): the table content is
-    * laid out on the k-way Morton interleave of the cluster columns
-    * (each scaled to ⌊62/k⌋ ≤ 16 bits by min/max normalization),
-    * range-partitioned into buckets × filesPerDir contiguous
-    * z-slices; every `filesPerDir` consecutive slices land as the
-    * files of one data directory. The commit log records [min, max]
-    * on EVERY cluster column at BOTH grains — per directory (the
-    * coarse prune) and per FILE (where the real 100 TB I/O win
-    * lives: a k-D box prunes most files even inside a surviving
-    * directory) — plus each column's stat-ordering kind, so readers
-    * never apply numeric ordering to lexicographic stats. One atomic
-    * commit; the range exchange on the z-value is the only shuffle;
-    * the stats pass is one grouped aggregate over input_file_name. */
+    * min/max is one 1-row aggregate. One atomic commit; the range
+    * exchange on the z-value is the only shuffle; the stats pass is
+    * one grouped aggregate over input_file_name. */
   def rewriteClusteredN(df: DataFrame, root: String, cols: Seq[String],
                         buckets: Int, filesPerDir: Int = 4): Long = {
-    import org.apache.spark.sql.functions.{col, expr, input_file_name,
-      max, min, spark_partition_id, floor, lit}
+    import org.apache.spark.sql.functions.{expr, max, min,
+      spark_partition_id, floor, lit}
     require(cols.size >= 2, "rewriteClusteredN wants >= 2 cluster columns")
     require(filesPerDir >= 1, "filesPerDir must be >= 1")
     val spark = df.sparkSession
     Exprs.register(spark) // zordern
     val prev = activeDirs(spark, root)
-    val next = latestVersion(spark, root).getOrElse(-1L) + 1
-    val base = f"data-v$next%010d-${java.util.UUID.randomUUID().toString.take(8)}"
+    val next = nextVersion(spark, root)
+    val base = newDataDir(next)
     val bits = math.min(16, 62 / cols.size)
     val scaleMax = (1L << bits) - 1
     // Ordinal for the z-curve only — layout quality, never
@@ -1352,68 +1224,9 @@ object LakeTable {
         floor(spark_partition_id().cast("long") / lit(filesPerDir)))
       .write.mode("errorifexists").partitionBy("__bucket")
       .parquet(s"$root/$base")
-    val f = fs(spark, root)
-    val leaves = f.listStatus(new Path(root, base)).toSeq
-      .map(_.getPath.getName)
-      .filter(_.startsWith("__bucket="))
-      .sorted
-      .map(n => s"$base/$n")
-    val kinds = cols.map(c => c -> statKind(df.schema(c).dataType)).toMap
-    // ONE grouped aggregate keyed by the actual file path yields the
-    // per-file bounds; directory bounds fold from their files under
-    // each column's declared ordering — no second data pass.
-    val statAggs = cols.flatMap(c => Seq(min(col(c)).cast("string"),
-                                         max(col(c)).cast("string")))
-    val fileAgg = spark.read.parquet(s"$root/$base")
-      .groupBy(input_file_name().as("__f"))
-      .agg(statAggs.head, statAggs.tail: _*)
-      .collect()
-    def relOf(uri: String): (String, String) = {
-      // ".../<base>/__bucket=K/part-....parquet" → (dir add-entry, file)
-      val idx = uri.indexOf(base)
-      require(idx >= 0, s"lake: stats file $uri outside $base")
-      val rel = uri.substring(idx) // base/__bucket=K/part-...
-      val cut = rel.lastIndexOf('/')
-      (rel.substring(0, cut), rel.substring(cut + 1))
-    }
-    val perFile = fileAgg.map { r =>
-      val (dir, file) = relOf(r.getString(0))
-      // an all-null column in a file records no bounds for it — the
-      // file then always survives pruning on that column
-      val colStats = cols.zipWithIndex.flatMap { case (c, i) =>
-        (Option(r.getString(1 + 2 * i)), Option(r.getString(2 + 2 * i)))
-          match {
-            case (Some(mn), Some(mx)) => Some(c -> (mn, mx))
-            case _ => None
-          }
-      }.toMap
-      (dir, file, colStats)
-    }
-    val fileStats = perFile.groupBy(_._1).map { case (dir, fs0) =>
-      dir -> fs0.sortBy(_._2).map(t => (t._2, t._3)).toSeq
-    }
-    def foldMin(c: String, a: String, b: String): String =
-      if (kinds(c) == "num") { if (BigDecimal(a) <= BigDecimal(b)) a else b }
-      else { if (a <= b) a else b }
-    def foldMax(c: String, a: String, b: String): String =
-      if (kinds(c) == "num") { if (BigDecimal(a) >= BigDecimal(b)) a else b }
-      else { if (a >= b) a else b }
-    val dirStats = perFile.groupBy(_._1).map { case (dir, fs0) =>
-      dir -> cols.flatMap { c =>
-        val bounds = fs0.flatMap(_._3.get(c))
-        // a directory whose every file has bounds on c gets dir bounds;
-        // any unbounded file leaves the directory unbounded on c
-        if (bounds.length == fs0.length && bounds.nonEmpty)
-          Some(c -> (bounds.map(_._1).reduce(foldMin(c, _, _)),
-                     bounds.map(_._2).reduce(foldMax(c, _, _))))
-        else None
-      }.toMap
-    }
-    writeCommit(spark, root,
-      Commit(next, leaves, prev, None, Map.empty,
-             leaves.flatMap(d => dirStats.get(d).map(d -> _)).toMap,
-             kinds,
-             leaves.flatMap(d => fileStats.get(d).map(d -> _)).toMap))
+    val l = landed(spark, root, base, Some("__bucket"), df.schema, cols)
+    writeCommit(spark, root, Commit(next, l.leaves, prev,
+      colStats = l.colStats, colKinds = l.kinds, fileStats = l.fileStats))
     next
   }
 

@@ -68,8 +68,8 @@ object PipelineConfig {
     * references); query stages read only the base tables and sit at
     * wave 0. A stage's wave = 1 + max(dependency waves). Stages in
     * one wave are mutually independent by construction — the
-    * parallel runner's unit of concurrency, and the pipetree DAG
-    * surface made explicit. */
+    * pipetree DAG surface made explicit (`_run.json` and `--plan`
+    * report it). */
   def waves(pipeline: Pipeline): Map[String, Int] = {
     val level = scala.collection.mutable.LinkedHashMap[String, Int]()
     pipeline.stages.foreach { st =>
@@ -77,9 +77,7 @@ object PipelineConfig {
         case Some(sql) =>
           // case-insensitive match: Spark resolves temp-view names
           // case-insensitively, so 'FROM Pricing' depends on stage
-          // "pricing" — a case-sensitive match put such a stage in
-          // wave 0 under --parallel, racing its dependency's
-          // createOrReplaceTempView
+          // "pricing"
           val words =
             sql.split("[^A-Za-z0-9_]+").map(_.toLowerCase).toSet
           level.keys.filter(k => words.contains(k.toLowerCase)).toSeq
@@ -142,32 +140,6 @@ object PipelineConfig {
     val lvl = waves(pipeline)
     pipeline.stages.map(st =>
       runStage(spark, sfDir, pipeline, st, lvl(st.name)))
-  }
-
-  /** DAG-parallel run: stages execute wave by wave, every stage in a
-    * wave concurrently (they are independent by construction — see
-    * `waves`). Spark actions are thread-safe; concurrent cache
-    * materializations target DISTINCT stage names (same-key races are
-    * the scratch-then-rename contract, CacheRaceSpec). Views register
-    * as each stage finishes, before the next wave parses its SQL.
-    * Results are identical to the sequential runner — parallelism
-    * changes wall time, never data (PipelineSpec asserts). */
-  def runReportParallel(spark: SparkSession, sfDir: String,
-                        pipeline: Pipeline): Seq[StageRun] = {
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    implicit val ec: ExecutionContext = ExecutionContext.global
-    val lvl = waves(pipeline)
-    val byWave = pipeline.stages.groupBy(st => lvl(st.name)).toSeq.sortBy(_._1)
-    val runs = byWave.flatMap { case (w, stages) =>
-      Await.result(
-        Future.sequence(stages.map(st =>
-          Future(runStage(spark, sfDir, pipeline, st, w)))),
-        Duration.Inf)
-    }
-    // report in declaration order, like the sequential runner
-    val byName = runs.map(r => r.name -> r).toMap
-    pipeline.stages.map(st => byName(st.name))
   }
 
   /** Runs the pipeline; returns every stage's DataFrame by name. */

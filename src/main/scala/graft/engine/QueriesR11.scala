@@ -209,10 +209,14 @@ object QueriesR11 {
     * arithmetic is UNCHANGED (k = size(vals)-1-j is the same lag the
     * exploded spelling computed as ti − i; terms are integers, so the
     * fold order cannot show — the frame-accumulation-FP-order hazard
-    * the note above bans does not apply to an integer fold), the term
-    * sum mirrors SUM's null semantics (null skipped, all-null →
-    * null), and m = window size ≡ the old per-ti count. State per key
-    * is the 32-value frame; skew = hottest user. */
+    * the note above bans does not apply to an integer fold), and m =
+    * window size ≡ the old per-ti count. State per key is the
+    * 32-value frame; skew = hottest user.
+    *
+    * Precondition: `events.value` is non-null (FixtureShapeSpec pins
+    * it at every tier). `collect_list` drops NULLs, so a null value
+    * would shift every later lag and shrink m: the fold cannot give
+    * SUM's null semantics, and it has no null arm. */
   def eventsEwma(s: SparkSession, d: String): DataFrame = {
     val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
       .rowsBetween(-31, Window.currentRow)
@@ -224,9 +228,7 @@ object QueriesR11 {
           // exact 1e-9-unit integer: floor of the IEEE-scaled double
           "FLOOR(v * pow(2.0, -(size(vals) - 1 - j)) * 1000000000.0 " +
           "+ 0.5)), " +
-          "CAST(NULL AS BIGINT), " +
-          "(acc, x) -> CASE WHEN x IS NULL THEN acc " +
-          "WHEN acc IS NULL THEN x ELSE acc + x END)"))
+          "CAST(0 AS BIGINT), (acc, x) -> acc + x)"))
       .withColumn("m", size(col("vals")).cast("long"))
       .select(col("event_id"), col("user_id"), col("ts"),
         col("value"), col("m"),

@@ -407,7 +407,7 @@ object QueriesR15 {
       ArtifactCache.artifactHash(base)) { r =>
       LakeTable.appendPartitioned(base, r, "yr", "odate")
     }.dir
-    LakeTable.readRange(s, root, "odate", "1994-01-01", "1995-12-31")
+    LakeTable.readRange(s, root, Seq(("odate", "1994-01-01", "1995-12-31")))
       .groupBy(substring(col("odate"), 1, 7).as("month"))
       .agg(count(lit(1)).as("n_orders"),
            sum("price").cast("double").as("revenue"))
@@ -513,7 +513,7 @@ object QueriesR15 {
         LakeTable.append(base.filter(col("key") % 4 === p), r))
       LakeTable.rewriteClustered(LakeTable.read(s, r), r, "odate", 8)
     }.dir
-    LakeTable.readRange(s, root, "odate", "1996-01-01", "1996-12-31")
+    LakeTable.readRange(s, root, Seq(("odate", "1996-01-01", "1996-12-31")))
       .groupBy(substring(col("odate"), 1, 7).as("month"))
       .agg(count(lit(1)).as("n_orders"),
            sum("price").cast("double").as("revenue"))

@@ -21,7 +21,7 @@ object QueriesR16 {
     * read path OPTIMIZE ZORDER exists for, which no 1-D sort can
     * serve: orders land in four arrival-order appends (every
     * directory spans the full (date, custkey) plane — nothing
-    * prunable), then one `rewriteClustered2D` commit lays the content
+    * prunable), then one `rewriteClusteredN` commit lays the content
     * on the Morton-interleaved (o_orderdate, o_custkey) curve into 16
     * directories whose per-directory [min, max] on BOTH columns goes
     * into the commit log. The (two-year date) × (custkey prefix)
@@ -51,10 +51,10 @@ object QueriesR16 {
       ArtifactCache.artifactHash(base)) { r =>
       (0 until 4).foreach(p =>
         LakeTable.append(base.filter(col("key") % 4 === p), r))
-      LakeTable.rewriteClustered2D(LakeTable.read(s, r), r,
-        "odate", "custkey", 16)
+      LakeTable.rewriteClusteredN(LakeTable.read(s, r), r,
+        Seq("odate", "custkey"), 16)
     }.dir
-    LakeTable.readRange2(s, root,
+    LakeTable.readRange(s, root,
         Seq(("odate", "1994-01-01", "1995-12-31"),
             ("custkey", "1", "750")))
       .groupBy(substring(col("odate"), 1, 7).as("month"))

@@ -669,7 +669,7 @@ object QueriesR17 {
       LakeTable.rewriteClusteredN(LakeTable.read(s, r), r,
         Seq("odate", "custkey", "price"), 8, filesPerDir = 4)
     }.dir
-    LakeTable.readRangeFiles(s, root,
+    LakeTable.readRange(s, root,
         Seq(("odate", "1994-01-01", "1995-12-31"),
             ("custkey", "1", "750"),
             ("price", "50000", "150000")))

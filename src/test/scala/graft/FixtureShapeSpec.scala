@@ -42,6 +42,16 @@ class FixtureShapeSpec extends SparkTestBase {
     }
   }
 
+  test("events.value is non-null at every SF (the events_ewma precondition)") {
+    // eventsEwma folds collect_list(value), which drops NULLs: a null
+    // value would shift every later lag instead of being skipped
+    for ((d, _, _, _, _, _) <- shapes) {
+      val nulls = engine.Tables.events(spark, d)
+        .filter(org.apache.spark.sql.functions.col("value").isNull).count()
+      assert(nulls == 0L, s"$d has $nulls null events.value rows")
+    }
+  }
+
   test("events.ts scanned type is a repairTs-supported encoding at every SF") {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     for ((d, _, _, _, _, _) <- shapes) {

@@ -136,7 +136,7 @@ class IngestMaintenanceSpec extends SparkTestBase {
     val vroot = Ingest.vecsRoot(mx)
     val someCell = LakeTable.read(spark, vroot)
       .select("cell_id").limit(1).collect()(0).getLong(0)
-    val prunedFiles = LakeTable.readRange2(spark, vroot,
+    val prunedFiles = LakeTable.readRange(spark, vroot,
       Seq(("cell_id", someCell.toString, someCell.toString)))
       .inputFiles.length
     val allFiles = LakeTable.read(spark, vroot).inputFiles.length

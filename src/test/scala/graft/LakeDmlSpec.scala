@@ -272,7 +272,7 @@ class LakeDmlSpec extends SparkTestBase {
     LakeTable.append((low ++ high).toDF("k", "v", "n"), root)
     LakeTable.rewriteClustered(LakeTable.read(spark, root), root, "k", 2)
     val before = LakeTable.activeDirs(spark, root)
-    // the hint is IMPLIED by the predicate (the rangeDirs2 contract)
+    // the hint is IMPLIED by the predicate (the rangeDirs contract)
     val rep = LakeDml.updateWhere(spark, root,
       col("v") === "a" && col("k") < 50,
       Map("v" -> lit("Z"), "n" -> (col("n") * 2)),

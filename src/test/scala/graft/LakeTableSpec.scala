@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import graft.engine.LakeTable
 
 import org.apache.spark.sql.functions._
@@ -77,12 +79,12 @@ class LakeTableSpec extends SparkTestBase {
     LakeTable.logFilesRead.set(0L)
     // survivors = the 2 stat'd post-checkpoint dirs + the rewrite dir
     // (committed without stats, so it must ALWAYS survive pruning)
-    val pruned = LakeTable.rangeDirs(spark, root, "z01", "z02")
+    val pruned = LakeTable.rangeDirs(spark, root, Seq(("v", "z01", "z02")))
     assert(LakeTable.logFilesRead.get() <= 4,
       s"rangeDirs touched ${LakeTable.logFilesRead.get()} log files")
     assert(pruned.size == 3 && LakeTable.activeDirs(spark, root).size == 3,
       s"stats lost in checkpoint: $pruned")
-    assert(LakeTable.rangeDirs(spark, root, "z99", "z99").size == 1,
+    assert(LakeTable.rangeDirs(spark, root, Seq(("v", "z99", "z99"))).size == 1,
       "pre-checkpoint stats must still prune the post-checkpoint dirs")
     // txn high-water mark survived the fold: replaying batch 7 is a no-op
     assert(LakeTable.rewriteTxn(LakeTable.read(spark, root), root,
@@ -127,7 +129,7 @@ class LakeTableSpec extends SparkTestBase {
       root, "pl_app", 3L).isEmpty)
     // stats survived: range pruning still cuts to the matching dir
     // (+ the unstat'd txn dir, which must always survive)
-    val dirs = LakeTable.rangeDirs(spark, root, "v003", "v004")
+    val dirs = LakeTable.rangeDirs(spark, root, Seq(("v", "v003", "v004")))
     assert(dirs.size == 3, s"stats lost after pruneLog: $dirs")
   }
 
@@ -233,20 +235,20 @@ class LakeTableSpec extends SparkTestBase {
     }
     assert(LakeTable.activeDirs(spark, root).size == 3)
     // a range inside the middle directory keeps exactly one dir
-    val pruned = LakeTable.rangeDirs(spark, root, "00150", "00160")
+    val pruned = LakeTable.rangeDirs(spark, root, Seq(("k", "00150", "00160")))
     assert(pruned.size == 1, s"expected 1 surviving dir, got $pruned")
-    val got = LakeTable.readRange(spark, root, "k", "00150", "00160")
+    val got = LakeTable.readRange(spark, root, Seq(("k", "00150", "00160")))
       .count()
     assert(got == 11, s"range read returned $got rows (want 11)")
     // a range spanning two directories keeps two
-    assert(LakeTable.rangeDirs(spark, root, "00090", "00110").size == 2)
+    assert(LakeTable.rangeDirs(spark, root, Seq(("k", "00090", "00110"))).size == 2)
     // stats are an optimization, never a filter: a dir committed
     // WITHOUT stats always survives pruning
     LakeTable.append(Seq(("99999", 9L)).toDF("k", "v"), root)
-    assert(LakeTable.rangeDirs(spark, root, "00150", "00160").size == 2,
+    assert(LakeTable.rangeDirs(spark, root, Seq(("k", "00150", "00160"))).size == 2,
       "stats-less directory was skipped — stats must never filter")
     // an empty intersection returns an empty frame with the schema
-    val none = LakeTable.readRange(spark, root, "k", "55500", "55600")
+    val none = LakeTable.readRange(spark, root, Seq(("k", "55500", "55600")))
     assert(none.count() == 0 && none.columns.toSeq == Seq("k", "v"))
   }
 
@@ -261,7 +263,7 @@ class LakeTableSpec extends SparkTestBase {
     assert(active.size == 3 && active.forall(_.contains("g=")),
       s"expected one leaf per partition value, got $active")
     // every leaf carries stats: a point range keeps exactly one dir
-    assert(LakeTable.rangeDirs(spark, root, "00105", "00105").size == 1)
+    assert(LakeTable.rangeDirs(spark, root, Seq(("k", "00105", "00105"))).size == 1)
     // the partition column is directory metadata, not row data
     assert(LakeTable.read(spark, root).columns.toSeq.sorted ==
       Seq("k", "v"))
@@ -276,20 +278,20 @@ class LakeTableSpec extends SparkTestBase {
       (0 until 100 by 2).map(i => (f"$i%05d", i.toLong)).toDF("k", "v"), root)
     LakeTable.append(
       (1 until 100 by 2).map(i => (f"$i%05d", i.toLong)).toDF("k", "v"), root)
-    assert(LakeTable.rangeDirs(spark, root, "00010", "00019").size == 2,
+    assert(LakeTable.rangeDirs(spark, root, Seq(("k", "00010", "00019"))).size == 2,
       "stats-less appends must all survive pruning")
     // one atomic clustered rewrite: 4 contiguous ranges with stats
     LakeTable.rewriteClustered(LakeTable.read(spark, root), root, "k", 4)
     val active = LakeTable.activeDirs(spark, root)
     assert(active.size >= 2 && active.forall(_.contains("__bucket=")),
       s"expected bucket leaves, got $active")
-    val pruned = LakeTable.rangeDirs(spark, root, "00010", "00019")
+    val pruned = LakeTable.rangeDirs(spark, root, Seq(("k", "00010", "00019")))
     assert(pruned.size < active.size,
       s"clustering did not enable pruning: $pruned of $active")
     // content is unchanged by layout: same rows, and the range read
     // returns exactly the rows in range
     assert(LakeTable.read(spark, root).count() == 100)
-    assert(LakeTable.readRange(spark, root, "k", "00010", "00019")
+    assert(LakeTable.readRange(spark, root, Seq(("k", "00010", "00019")))
       .count() == 10)
   }
 
@@ -301,31 +303,31 @@ class LakeTableSpec extends SparkTestBase {
       yield (a.toLong, b.toLong, (a * 32 + b).toLong)
     LakeTable.append(grid.filter(_._3 % 2 == 0).toDF("a", "b", "v"), root)
     LakeTable.append(grid.filter(_._3 % 2 == 1).toDF("a", "b", "v"), root)
-    LakeTable.rewriteClustered2D(LakeTable.read(spark, root), root,
-      "a", "b", 16)
+    LakeTable.rewriteClusteredN(LakeTable.read(spark, root), root,
+      Seq("a", "b"), 16)
     val active = LakeTable.activeDirs(spark, root)
     assert(active.size >= 4 && active.forall(_.contains("__bucket=")),
       s"expected bucket leaves, got $active")
     // a narrow range on EITHER dimension alone prunes directories —
     // the property no 1-D sort offers (a sort on `a` cannot prune a
     // b-only predicate; the Morton layout prunes both)
-    val onlyA = LakeTable.rangeDirs2(spark, root, Seq(("a", "0", "3")))
-    val onlyB = LakeTable.rangeDirs2(spark, root, Seq(("b", "0", "3")))
+    val onlyA = LakeTable.rangeDirs(spark, root, Seq(("a", "0", "3")))
+    val onlyB = LakeTable.rangeDirs(spark, root, Seq(("b", "0", "3")))
     assert(onlyA.size < active.size,
       s"a-only predicate kept all ${active.size} dirs")
     assert(onlyB.size < active.size,
       s"b-only predicate kept all ${active.size} dirs")
     // both predicates together prune to the intersection or fewer
-    val both = LakeTable.rangeDirs2(spark, root,
+    val both = LakeTable.rangeDirs(spark, root,
       Seq(("a", "0", "3"), ("b", "0", "3")))
     assert(both.size <= math.min(onlyA.size, onlyB.size))
     // skipping changes what is scanned, never what is returned
-    assert(LakeTable.readRange2(spark, root,
+    assert(LakeTable.readRange(spark, root,
       Seq(("a", "0", "3"), ("b", "0", "3"))).count() == 16)
     assert(LakeTable.read(spark, root).count() == 1024)
     // numeric stat comparison: unpadded integer bounds work (the "9"
     // vs "10" lexicographic trap)
-    assert(LakeTable.readRange2(spark, root,
+    assert(LakeTable.readRange(spark, root,
       Seq(("a", "9", "10"))).count() == 64)
   }
 
@@ -339,7 +341,7 @@ class LakeTableSpec extends SparkTestBase {
     LakeTable.rewriteClusteredN(LakeTable.read(spark, root), root,
       Seq("a", "b", "c"), 8, filesPerDir = 4)
     val preds = Seq(("a", "0", "3"), ("b", "0", "3"), ("c", "0", "3"))
-    val survivingDirs = LakeTable.rangeDirs2(spark, root, preds)
+    val survivingDirs = LakeTable.rangeDirs(spark, root, preds)
     val (whole, files) = LakeTable.rangeFiles(spark, root, preds)
     assert(whole.isEmpty,
       s"every leaf carries file stats, none should scan whole: $whole")
@@ -353,7 +355,7 @@ class LakeTableSpec extends SparkTestBase {
       s"per-file stats skipped nothing: ${files.size} of " +
         s"$filesInSurvivors files in ${survivingDirs.size} dirs")
     // skipping changes what is scanned, never what is returned
-    val got = LakeTable.readRangeFiles(spark, root, preds)
+    val got = LakeTable.readRange(spark, root, preds)
     assert(got.count() == 4 * 4 * 4, s"got ${got.count()} rows")
     assert(LakeTable.read(spark, root).count() == 4096)
   }
@@ -374,9 +376,9 @@ class LakeTableSpec extends SparkTestBase {
     val want = LakeTable.read(spark, root)
       .filter($"s".cast("string").between("23", "27")).count()
     assert(want == 32, s"fixture broke: expected the 32 '25'-rows, got $want")
-    assert(LakeTable.readRange2(spark, root, preds).count() == want,
+    assert(LakeTable.readRange(spark, root, preds).count() == want,
       "dir-grain skipping changed the result for string-kind stats")
-    assert(LakeTable.readRangeFiles(spark, root, preds).count() == want,
+    assert(LakeTable.readRange(spark, root, preds).count() == want,
       "file-grain skipping changed the result for string-kind stats")
   }
 
@@ -1006,5 +1008,109 @@ class LakeTableSpec extends SparkTestBase {
     assert(LakeTable.pruneLog(spark, root) == Seq(4L, 5L))
     assert(LakeTable.pruneCheckpoints(spark, root, keep = 1) == Seq(4L))
     assert(LakeTable.read(spark, root).count() == 7)
+  }
+
+  test("golden log format: a pre-colStats commit and checkpoint replay, and stats-only dirs never prune") {
+    // On-disk compatibility: one checkpoint (v1, over a log pruned
+    // below it) and one commit (v2) spelled exactly as earlier
+    // writers spelled them, every field kind present — including the
+    // retired single-column `stats` map, which readers now ignore.
+    val root = freshRoot("golden")
+    val stage = freshRoot("golden_stage")
+    // one parquet file per data dir, at a fixed name the filestats cite
+    def land(dir: String, ks: Range): Unit = {
+      val tmp = s"$stage/$dir"
+      ks.map(_.toLong).toDF("k").coalesce(1).write.parquet(tmp)
+      val part = new java.io.File(tmp).listFiles()
+        .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).get
+      val d = new java.io.File(s"$root/$dir")
+      d.mkdirs()
+      Files.move(part.toPath, new java.io.File(d, "part-0.parquet").toPath)
+    }
+    land("data-a", 0 until 10)  // legacy stats only (checkpoint)
+    land("data-b", 10 until 20)
+    land("data-c", 20 until 30) // removed by v2
+    land("data-d", 30 until 40)
+    land("data-e", 40 until 50) // legacy stats only (commit)
+    val log = java.nio.file.Paths.get(root, "_graft_log")
+    Files.createDirectories(log)
+    def put(name: String, json: String): Unit =
+      Files.writeString(log.resolve(name), json)
+    put("0000000001.json",
+      """{"version":1,"add":[],"remove":[],"txnApp":"app1","txnBatch":4}""")
+    put("0000000001.checkpoint.json", """{"version":1,
+      |"active":["data-a","data-b","data-c"],
+      |"stats":{"data-a":{"min":"0","max":"9"}},
+      |"colstats":{"data-b":{"k":{"min":"10","max":"19"}},"data-c":{"k":{"min":"20","max":"29"}}},
+      |"colkinds":{"k":"num"},
+      |"filestats":{"data-b":[{"f":"part-0.parquet","cols":{"k":{"min":"10","max":"19"}}}]},
+      |"txns":{"app1":4},
+      |"eqdels":[{"d":"eqdel-a","k":"k"}],
+      |"eqstats":{"eqdel-a":{"min":"5","max":"5","kd":"num"}},
+      |"rowcounts":{"data-a":10,"data-b":10,"data-c":10},
+      |"colmeta":{"data-b":{"k":{"ndv":"AAAA","nulls":0}}}}""".stripMargin)
+    put("0000000002.json", """{"version":2,
+      |"add":["data-d","data-e"],"remove":["data-c"],
+      |"txnApp":"app1","txnBatch":5,
+      |"stats":{"data-d":{"min":"30","max":"39"},"data-e":{"min":"40","max":"49"}},
+      |"colstats":{"data-d":{"k":{"min":"30","max":"39"}}},
+      |"colkinds":{"k":"num"},
+      |"filestats":{"data-d":[{"f":"part-0.parquet","cols":{"k":{"min":"30","max":"39"}}}]},
+      |"eqadd":[{"d":"eqdel-b","k":"k"}],
+      |"eqstats":{"eqdel-b":{"min":"7","max":"7","kd":"num"}},
+      |"rowcounts":{"data-d":10},
+      |"colmeta":{"data-d":{"k":{"ndv":"BBBB","nulls":0}}}}""".stripMargin)
+
+    val st = LakeTable.replayState(spark, root)
+    assert(st.version == 2L)
+    assert(st.active == Seq("data-a", "data-b", "data-d", "data-e"))
+    assert(st.txns == Map("app1" -> 5L))
+    assert(st.colStats == Map("data-b" -> Map("k" -> ("10", "19")),
+                              "data-d" -> Map("k" -> ("30", "39"))))
+    assert(st.colKinds == Map("k" -> "num"))
+    assert(st.fileStats == Map(
+      "data-b" -> Seq(("part-0.parquet", Map("k" -> ("10", "19")))),
+      "data-d" -> Seq(("part-0.parquet", Map("k" -> ("30", "39"))))))
+    assert(st.eqdels == Seq("eqdel-a" -> "k", "eqdel-b" -> "k"))
+    assert(st.eqdelStats == Map("eqdel-a" -> ("5", "5", "num"),
+                                "eqdel-b" -> ("7", "7", "num")))
+    assert(st.rowCounts == Map("data-a" -> 10L, "data-b" -> 10L, "data-d" -> 10L))
+    assert(st.colMeta == Map("data-b" -> Map("k" -> ("AAAA", 0L)),
+                             "data-d" -> Map("k" -> ("BBBB", 0L))))
+    assert(LakeTable.history(spark, root) == Seq(
+      (1L, 0, 0, 0, 0, Some("app1"), None),
+      (2L, 2, 1, 1, 0, Some("app1"), Some(10L))))
+    assert(LakeTable.read(spark, root).count() == 40)
+    assert(LakeTable.read(spark, root, Some(1L)).count() == 30)
+
+    // the `stats`-only dirs are un-stat'd: they survive every prune,
+    // even ranges their legacy bounds exclude
+    val legacy = Seq("data-a", "data-e")
+    for (preds <- Seq(Seq(("k", "10", "12")), Seq(("k", "100", "200")),
+                      Seq(("k", "0", "9"), ("k", "30", "31")))) {
+      assert(legacy.forall(LakeTable.rangeDirs(spark, root, preds).contains),
+        s"a stats-only dir was pruned by $preds")
+      val (whole, _) = LakeTable.rangeFiles(spark, root, preds)
+      assert(legacy.forall(whole.contains), s"rangeFiles lost one for $preds")
+      val scanned = LakeTable.readRange(spark, root, preds).inputFiles
+      assert(legacy.forall(d => scanned.exists(_.contains(s"/$d/"))),
+        s"readRange skipped a stats-only dir for $preds")
+    }
+    assert(LakeTable.rangeDirs(spark, root, Seq(("k", "10", "12"))) ==
+      Seq("data-a", "data-b", "data-e"))
+    assert(LakeTable.rangeFiles(spark, root, Seq(("k", "10", "12"))) ==
+      (Seq("data-a", "data-e"), Seq("data-b/part-0.parquet")))
+    assert(LakeTable.readRange(spark, root, Seq(("k", "10", "12"))).count() == 3)
+    assert(LakeTable.readRange(spark, root, Seq(("k", "40", "41"))).count() == 2)
+
+    // today's writers keep the field names: a fresh checkpoint of
+    // this state spells exactly the old names and replays identically
+    LakeTable.checkpoint(spark, root)
+    val written = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(log.resolve("0000000002.checkpoint.json").toFile)
+    assert(written.fieldNames().asScala.toSet == Set("version", "active",
+      "colstats", "colkinds", "filestats", "txns", "eqdels", "eqstats",
+      "rowcounts", "colmeta"))
+    assert(LakeTable.replayState(spark, root) == st)
   }
 }

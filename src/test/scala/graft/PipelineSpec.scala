@@ -143,6 +143,10 @@ class PipelineSpec extends SparkTestBase {
     for (st <- counts.keys)
       assert(manifest.contains(s""""name":"$st""""), s"$st not in _run.json")
     assert(manifest.contains(""""rows":""") && manifest.contains(""""ms":"""))
+    // stages report in declaration order, with their DAG waves
+    assert(manifest.indexOf("\"name\":\"pricing\"") <
+           manifest.indexOf("\"name\":\"summary\""))
+    assert(manifest.contains(""""wave":2"""))
   }
 
   test("stage DAG waves: query stages level 0, SQL stages after their refs") {
@@ -159,54 +163,6 @@ class PipelineSpec extends SparkTestBase {
     assert(lvl("curated") == 1, s"curated at ${lvl("curated")}")
     assert(lvl("big_groups") == 1)
     assert(lvl("summary") == 2, s"summary at ${lvl("summary")}")
-  }
-
-  test("parallel DAG run produces the sequential runner's exact results") {
-    val seqOut = Files.createTempDirectory("graft_pipe_seq").toString
-    val parOut = Files.createTempDirectory("graft_pipe_par").toString
-    val a = Pipeline.runFile(spark, "tools/example_pipeline.json",
-                             sfDir, seqOut)
-    val b = Pipeline.runFile(spark, "tools/example_pipeline.json",
-                             sfDir, parOut, parallel = true)
-    assert(a == b, s"parallel diverged: seq=$a par=$b")
-    // spot-check full content equality on the final join stage
-    val sc = spark.read.parquet(s"$seqOut/curated").collect()
-      .map(_.toSeq).toSet
-    val pc = spark.read.parquet(s"$parOut/curated").collect()
-      .map(_.toSeq).toSet
-    assert(sc == pc)
-    // the parallel manifest still reports declaration order + waves
-    val manifest = java.nio.file.Files.readString(
-      java.nio.file.Paths.get(s"$parOut/_run.json"))
-    assert(manifest.indexOf("\"name\":\"pricing\"") <
-           manifest.indexOf("\"name\":\"summary\""))
-    assert(manifest.contains(""""wave":2"""))
-  }
-
-  test("parallel runner: cached SQL stage in a later wave materializes once") {
-    // two independent wave-0 query stages; a wave-1 CACHED SQL stage
-    // joining them — the parallel path must register wave-0 views
-    // before wave 1 parses, and the artifact must land exactly once
-    val root = Files.createTempDirectory("graft_pipe_cache_par").toString
-    val json =
-      s"""{"cacheRoot": ${'"'}$root${'"'}, "stages": [
-         |  {"name": "a_regions", "query": "scan_project_filter"},
-         |  {"name": "b_docs", "query": "docs_token_stats"},
-         |  {"name": "joined",
-         |   "sql": "SELECT count(*) AS n_pairs FROM a_regions CROSS JOIN b_docs",
-         |   "cache": true}
-         |]}""".stripMargin
-    val p = PipelineConfig.parse(json)
-    assert(PipelineConfig.waves(p) ==
-      Map("a_regions" -> 0, "b_docs" -> 0, "joined" -> 1))
-    val report = PipelineConfig.runReportParallel(spark, sfDir, p)
-    assert(report.map(_.name) == Seq("a_regions", "b_docs", "joined"))
-    assert(report.last.cacheHit.contains(false), "fresh root reported a hit")
-    val row = report.last.df.collect()(0)
-    assert(row.getLong(0) > 0)
-    // a second parallel run over the same root is a pure cache hit
-    val again = PipelineConfig.runReportParallel(spark, sfDir, p)
-    assert(again.last.cacheHit.contains(true), "artifact not reused")
   }
 
   test("cached SQL stage with qualified refs hashes via the analyzed plan") {
@@ -254,8 +210,8 @@ class PipelineSpec extends SparkTestBase {
   test("waves: SQL view references resolve case-insensitively") {
     // Spark resolves temp-view names case-insensitively, so 'FROM
     // Pricing' depends on stage "pricing" — a case-sensitive match
-    // placed such a stage in wave 0, racing its dependency's
-    // createOrReplaceTempView under --parallel (r9 advice)
+    // placed such a stage in wave 0, ahead of its dependency (r9
+    // advice)
     val p = PipelineConfig.parse(
       """{"stages": [
         |  {"name": "pricing", "query": "q1_pricing_summary"},

@@ -231,9 +231,9 @@ class SqlDmlSpec extends SparkTestBase {
     assert(s.exec("SELECT count(*) AS n FROM t").as[Long].head() == 100L)
     // the optimized layout carries stats: a range read prunes
     val root = s.tableRoot("t")
-    val pruned = LakeTable.rangeDirs2(spark, root,
+    val pruned = LakeTable.rangeDirs(spark, root,
       Seq(("k", "0", "10")))
-    val all = LakeTable.rangeDirs2(spark, root, Nil)
+    val all = LakeTable.rangeDirs(spark, root, Nil)
     assert(pruned.size < all.size)
   }
 
